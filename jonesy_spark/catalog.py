@@ -104,6 +104,24 @@ class Catalog:
             self.table(name).createOrReplaceTempView(name)
 
 
+#: Spark's byte-size suffixes (binary multiples), two-letter ones
+#: first so "128mb" is not read as "128m" plus a "b" suffix.
+_SIZE_SUFFIXES = (
+    ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3), ("tb", 1024**4),
+    ("b", 1), ("k", 1024), ("m", 1024**2), ("g", 1024**3), ("t", 1024**4),
+)
+
+
+def _conf_bytes(raw: str) -> int:
+    """Bytes in a Spark size setting: a bare byte count, or a number
+    with one of the suffixes b/k/kb/m/mb/g/gb/t/tb."""
+    raw = raw.strip().lower()
+    for suffix, mult in _SIZE_SUFFIXES:
+        if raw.endswith(suffix):
+            return int(raw[: -len(suffix)]) * mult
+    return int(raw)
+
+
 def spread(df: DataFrame, *key_cols) -> DataFrame:
     """Scale-adaptive parallelism floor for heavy per-row compute over a
     narrow source (guide §2.5 "input skew → repartition after the read"):
@@ -146,17 +164,9 @@ def spread(df: DataFrame, *key_cols) -> DataFrame:
             return df
         return df.repartition(target, *key_cols) if key_cols else df.repartition(target)
 
-    def _conf_bytes(key: str, default: int) -> int:
-        raw = spark.conf.get(key, str(default))
-        units = {"k": 1024, "m": 1024**2, "g": 1024**3, "b": 1}
-        raw = raw.lower()
-        for suffix, mult in units.items():
-            if raw.endswith(suffix):
-                return int(raw[: -len(suffix)]) * mult
-        return int(raw)
-
-    max_part = _conf_bytes("spark.sql.files.maxPartitionBytes", 128 * 1024**2)
-    open_cost = _conf_bytes("spark.sql.files.openCostInBytes", 4 * 1024**2)
+    conf = spark.conf.get
+    max_part = _conf_bytes(conf("spark.sql.files.maxPartitionBytes", "128m"))
+    open_cost = _conf_bytes(conf("spark.sql.files.openCostInBytes", "4m"))
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
     sizes = []

@@ -14,6 +14,7 @@ Two tiers, per SURVEY.md §7 Phase 5:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -22,12 +23,15 @@ from ..functions.scalars import micro_units
 from .dedup import _micro_threshold
 
 
-def _prepared(emb: DataFrame, n_partitions: int = 64) -> DataFrame:
+def _prepared(emb: DataFrame, n_partitions: int | None = 64) -> DataFrame:
     # Explicit repartition: embedding folds are CPU-heavy but byte-light,
     # so AQE's size-based coalescing would serialize them otherwise
-    # (same rationale as operators.dedup.CPU_PARTITIONS).
+    # (same rationale as operators.dedup.CPU_PARTITIONS). None keeps
+    # the input's partitioning.
     v = VX.as_double(F.col("embedding"))
-    return emb.repartition(n_partitions).select(
+    if n_partitions:
+        emb = emb.repartition(n_partitions)
+    return emb.select(
         F.col("vec_id"), v.alias("v"), VX.norm(v).alias("nrm"), F.col("label")
     )
 
@@ -968,64 +972,29 @@ def quantized_topk(
     )
 
 
-def pq_codebooks(
-    emb: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    seed: int = 13,
-    max_iter: int = 8,
-    n_train: int = 4096,
-    prepared: DataFrame | None = None,
-) -> DataFrame:
-    """Product-quantization codebooks (Jégou et al. 2011, public
-    method — the IVF-PQ half every billion-scale vector store runs):
-    the UNIT-normalized embedding splits into ``m`` contiguous
-    subspaces and each trains its own ``k``-center Lloyd k-means ON A
-    DETERMINISTIC SAMPLE — the faiss convention: codebook QUALITY is
-    bounded by the sample's coverage of the distribution, not its
-    size, so training collects at most ``n_train`` vectors (md5-order
-    draw; 4096 x dim doubles = single-digit MB at any corpus scale —
-    the same bounded-driver budget as the BPE pages and IVF
-    centroids) and iterates in numpy on the driver. An MLlib fit per
-    subspace would schedule ``m`` distributed iterative jobs whose
-    fixed overhead dwarfs the math at ANY scale — measured 8x the
-    whole query's cost at sf0.1.
-
-    Returns ``(sub, code, sv array<double>)`` — ``m * k`` rows, a
-    codebook that broadcasts anywhere. Seeded and deterministic GIVEN
-    the engine (numpy argmin tie-break), but not a cross-engine
-    contract — PQ stays on the pytest-pinned surface with
-    :func:`quantized_topk`, never the oracle-checked one."""
-    import numpy as np
-
-    first = emb.select("embedding").first()
-    if first is None:
-        raise ValueError(
-            "pq_codebooks needs a non-empty embeddings frame to train on"
-        )
-    dim = len(first["embedding"])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    d = dim // m
-    # `prepared` lets pq_topk share ONE persisted _prepared frame
-    # across codebook training, encoding, the query side and the
-    # re-rank (r14: each used to re-run the scan + as_double + norm)
-    unit = (prepared if prepared is not None else _prepared(emb)).select(
-        "vec_id",
-        F.transform(F.col("v"), lambda x: x / F.col("nrm")).alias("u"),
-    )
+def _pq_train(emb, m=8, k=16, seed=13, max_iter=8, n_train=4096) -> np.ndarray:
+    """The ``(m, k, d)`` codebook array behind :func:`pq_codebooks`."""
     # deterministic md5-order sample, bounded collect (<= n_train rows)
     sample = (
-        unit.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+        _prepared(emb, None)
+        .select("vec_id", F.transform("v", lambda x: x / F.col("nrm")).alias("u"))
+        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
         .limit(n_train)
         .collect()
     )
+    if not sample:
+        raise ValueError(
+            "pq_codebooks needs a non-empty embeddings frame to train on"
+        )
     X = np.array([r["u"] for r in sample], dtype=np.float64)
+    if X.shape[1] % m != 0:
+        raise ValueError(f"dim {X.shape[1]} not divisible by m={m} subspaces")
+    d = X.shape[1] // m
     if len(X) < k:
         raise ValueError(
             f"pq_codebooks needs >= k={k} training vectors, got {len(X)}"
         )
-    rows = []
+    books = np.empty((m, k, d))
     for j in range(m):
         Xj = np.ascontiguousarray(X[:, j * d : (j + 1) * d])
         rng = np.random.RandomState(
@@ -1047,96 +1016,199 @@ def pq_codebooks(
                     centers[c] = members.mean(0)
                 else:
                     centers[c] = Xj[d2.min(1).argmax()]
-        rows.extend(
-            (j, c, [float(x) for x in centers[c]]) for c in range(k)
-        )
+        books[j] = centers
+    return books
+
+
+def pq_codebooks(
+    emb: DataFrame,
+    m: int = 8,
+    k: int = 16,
+    seed: int = 13,
+    max_iter: int = 8,
+    n_train: int = 4096,
+) -> DataFrame:
+    """Product-quantization codebooks (Jégou et al. 2011, public
+    method — the IVF-PQ half every billion-scale vector store runs):
+    the UNIT-normalized embedding splits into ``m`` contiguous
+    subspaces and each trains its own ``k``-center Lloyd k-means ON A
+    DETERMINISTIC SAMPLE — the faiss convention: codebook QUALITY is
+    bounded by the sample's coverage of the distribution, not its
+    size, so training collects at most ``n_train`` vectors (md5-order
+    draw; 4096 x dim doubles = single-digit MB at any corpus scale —
+    the same bounded-driver budget as the BPE pages and IVF
+    centroids) and iterates in numpy on the driver. An MLlib fit per
+    subspace would schedule ``m`` distributed iterative jobs whose
+    fixed overhead dwarfs the math at ANY scale — measured 8x the
+    whole query's cost at sf0.1. The bounded collect is the only Spark
+    job; ``dim`` is read off the sample.
+
+    Returns ``(sub, code, sv array<double>)`` — ``m * k`` rows, a
+    codebook that broadcasts anywhere. Seeded and deterministic GIVEN
+    the engine (numpy argmin tie-break), but not a cross-engine
+    contract — PQ stays on the pytest-pinned surface with
+    :func:`quantized_topk`, never the oracle-checked one."""
+    books = _pq_train(emb, m, k, seed, max_iter, n_train)
+    rows = [(j, c, books[j, c].tolist()) for j in range(m) for c in range(k)]
     return emb.sparkSession.createDataFrame(
         rows, "sub int, code int, sv array<double>"
     )
 
 
-def _pq_m(codebooks: DataFrame) -> int:
-    """Subspace count from a codebook frame, raising the house
-    ValueError on an empty one — max('sub') is NULL there, and
-    ``None + 1`` would surface as the opaque NoneType TypeError the
-    empty-frame guards exist to prevent."""
-    top = codebooks.select(F.max("sub")).first()[0]
-    if top is None:
+def _pq_books(codebooks: DataFrame) -> np.ndarray:
+    """Collect a ``(sub, code, sv)`` codebook frame into its
+    ``(m, k, d)`` array, raising the house ValueError on an empty one.
+    A code word missing from the frame stays +inf: never nearest."""
+    rows = codebooks.select("sub", "code", "sv").collect()
+    if not rows:
         raise ValueError(
             "empty PQ codebooks frame — train one with pq_codebooks "
             "(or read a store that has landed its codebook) first"
         )
-    return top + 1
+    m = max(r["sub"] for r in rows) + 1
+    k = max(r["code"] for r in rows) + 1
+    books = np.full((m, k, len(rows[0]["sv"])), np.inf)
+    for r in rows:
+        books[r["sub"], r["code"]] = r["sv"]
+    return books
 
 
-def pq_encode(
-    emb: DataFrame,
-    codebooks: DataFrame,
-    prepared: DataFrame | None = None,
-) -> DataFrame:
-    """Encode unit-normalized embeddings under a PQ codebook:
-    ``(vec_id, codes array<int>, label)`` with ``codes[j]`` the
-    nearest subspace-``j`` centroid — ``m`` small ints instead of
-    ``dim`` floats, the 32x-smaller scan side of :func:`pq_topk`.
+# The PQ kernel: NumPy over Arrow batches inside mapInArrow. Each
+# reduction folds left to right in the element order of the engine's
+# aggregate(zip_with(...)) folds, so unit vectors, distances and codes
+# are bit-identical to the Spark expressions (VX.norm, the codebook
+# sample, the fixture's frozen codes).
 
-    Plan shape: the codebook broadcasts; each vector explodes to its
-    ``m`` subvectors map-side, the ``k`` candidate distances fold in
-    the join projection, and the per-(vec, sub) argmin plus the
-    codes-array assembly are two keyed aggregations with map-side
-    combine (ties break to the lowest code, deterministically). No
-    corpus-wide anything but the one vec_id-keyed agg."""
-    m = _pq_m(codebooks)
-    dim_row = emb.select(F.size("embedding").alias("s")).first()
-    if dim_row is None:
-        # an empty batch encodes to an empty frame — the streaming
-        # writer's isEmpty() guard made this case real; the batch API
-        # must not die with an opaque NoneType subscript
-        return emb.sparkSession.createDataFrame(
-            [], "vec_id long, label string, codes array<int>"
-        )
-    d = dim_row["s"] // m
-    unit = (prepared if prepared is not None else _prepared(emb)).select(
-        "vec_id",
-        "label",
-        F.transform(F.col("v"), lambda x: x / F.col("nrm")).alias("u"),
-    )
-    subs = unit.select(
-        "vec_id",
-        "label",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).cast("int").alias("sub"),
-                        F.slice(F.col("u"), j * d + 1, d).alias("x"),
-                    )
-                    for j in range(m)
-                ]
+
+def _pq_unit(x: np.ndarray) -> np.ndarray:
+    """Rows divided by their norm, folded like ``VX.norm``."""
+    acc = np.zeros(len(x))
+    for t in range(x.shape[1]):
+        acc = acc + x[:, t] * x[:, t]
+    return x / np.sqrt(acc)[:, None]
+
+
+def _pq_lut(u: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m, k) squared distances from each subvector of ``u`` to every
+    code word of its subspace."""
+    m, k, d = books.shape
+    acc = np.zeros((len(u), m, k))
+    for t in range(d):
+        diff = u[:, t::d, None] - books[None, :, :, t]
+        acc = acc + diff * diff
+    return acc
+
+
+def _pq_codes(b, books: np.ndarray) -> np.ndarray:
+    """(n, m) codes of an Arrow batch: its ``codes`` column, or else the
+    nearest code word per subspace of each unit ``embedding`` (ties to
+    the lowest code — argmin keeps the first minimum)."""
+    given = "codes" in b.schema.names
+    col = b.column("codes" if given else "embedding")
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    if given:
+        return flat.astype(np.int64).reshape(len(col), -1)
+    x = _pq_unit(flat.astype(np.float64).reshape(len(col), -1))
+    return _pq_lut(x, books).argmin(2)
+
+
+def _pq_adc(lut: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """(q, n) ADC distances: each vector's m table entries summed in
+    subspace order."""
+    acc = lut[:, 0, codes[:, 0]]
+    for j in range(1, codes.shape[1]):
+        acc = acc + lut[:, j, codes[:, j]]
+    return acc
+
+
+def _pq_keep(qid, vid, adc, t, margin) -> np.ndarray:
+    """Indices of each query's first ``t`` rows by (adc, vec_id), plus
+    every row within ``margin`` of that query's t-th distance."""
+    order = np.lexsort((vid, adc, qid))
+    qs, a = qid[order], adc[order]
+    new = np.r_[True, qs[1:] != qs[:-1]]
+    starts = np.flatnonzero(new)
+    grp = np.cumsum(new) - 1
+    keep = np.arange(len(order)) - starts[grp] < t
+    if margin:
+        last = np.r_[starts[1:], len(order)] - 1
+        keep |= a <= a[np.minimum(starts + t - 1, last)][grp] + margin
+    return order[keep]
+
+
+def _pq_scorer(books, qids, lut, t, margin, cells=None):
+    """The mapInArrow body of :func:`pq_topk`: encode (or read codes),
+    score every (query, vector) pair by ADC, drop each query's own
+    vector and unprobed cells, and emit the partition's
+    :func:`_pq_keep` rows. Cutting batch by batch keeps the same rows
+    as one cut over the partition: a dropped row already trails ``t``
+    rows, and the t-th distance only falls."""
+
+    def score(batches):
+        import pyarrow as pa
+
+        q, v, a = np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
+        for b in batches:
+            if not b.num_rows:
+                continue
+            vid = b.column("vec_id").to_numpy().astype(np.int64)
+            ok = vid[None, :] != qids[:, None]
+            if cells is not None:
+                cell_ids, probed = cells
+                cid = b.column("cid").to_numpy()
+                at = np.searchsorted(cell_ids, cid).clip(max=len(cell_ids) - 1)
+                ok &= probed[:, at] & (cell_ids[at] == cid)
+            qi, vi = np.nonzero(ok)
+            q = np.concatenate([q, qids[qi]])
+            v = np.concatenate([v, vid[vi]])
+            a = np.concatenate([a, _pq_adc(lut, _pq_codes(b, books))[qi, vi]])
+            sel = _pq_keep(q, v, a, t, margin)
+            q, v, a = q[sel], v[sel], a[sel]
+        if len(q):
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(q), pa.array(v), pa.array(a)],
+                names=["query_id", "vec_id", "adc_d2"],
             )
-        ).alias("s"),
-    ).select("vec_id", "label", "s.sub", "s.x")
-    d2 = F.aggregate(
-        F.zip_with(F.col("x"), F.col("sv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, y: acc + y,
+
+    return score
+
+
+def pq_encode(emb: DataFrame, codebooks: DataFrame) -> DataFrame:
+    """Encode unit-normalized embeddings under a PQ codebook:
+    ``(vec_id, label, codes array<int>)`` with ``codes[j]`` the
+    nearest subspace-``j`` centroid (ties to the lowest code) — ``m``
+    small ints instead of ``dim`` floats, the 32x-smaller scan side of
+    :func:`pq_topk`.
+
+    Plan shape: the ``m * k`` codebook rows are collected once and ship
+    with the function; the scan is one map-only ``mapInArrow`` running
+    :func:`pq_topk`'s NumPy encoder over each Arrow batch. No shuffle,
+    and an empty frame encodes to an empty frame."""
+    from pyspark.sql.types import ArrayType, IntegerType
+
+    books = _pq_books(codebooks)
+    schema = emb.select("vec_id", "label").schema.add(
+        "codes", ArrayType(IntegerType())
     )
-    best = (
-        subs.join(F.broadcast(codebooks), "sub")
-        .select(
-            "vec_id",
-            "label",
-            "sub",
-            F.struct(d2.alias("d"), F.col("code")).alias("dc"),
-        )
-        .groupBy("vec_id", "label", "sub")
-        .agg(F.min("dc").getField("code").alias("code"))
-    )
-    return best.groupBy("vec_id", "label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("sub", "code"))),
-            lambda s: s.getField("code"),
-        ).alias("codes")
-    )
+
+    def encode(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            if not b.num_rows:
+                continue
+            codes = _pq_codes(b, books).astype(np.int32)
+            offsets = np.arange(0, codes.size + 1, codes.shape[1], dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column("vec_id"),
+                    b.column("label"),
+                    pa.ListArray.from_arrays(offsets, codes.ravel()),
+                ],
+                names=["vec_id", "label", "codes"],
+            )
+
+    return emb.select("vec_id", "label", "embedding").mapInArrow(encode, schema)
 
 
 def pq_topk(
@@ -1175,161 +1247,90 @@ def pq_topk(
     ``probes >= n_cells`` every cell is probed and the output equals
     the unrestricted scan exactly (pytest pins this).
 
-    Scale shape: the scan side reads ``m`` ints per vector (32x
-    fewer bytes than float32 at dim 64); the LUT is
-    ``n_queries * m * k`` rows — broadcast; scoring explodes codes
-    map-side and folds per (query, vec) with map-side combine; the
-    only corpus-wide exchange is that keyed agg (plus, under
-    ``n_cells``, one vec_id-co-keyed join tagging each code row with
-    its cell — the query-cell mask is a broadcast); the re-rank
-    touches ``n_queries * overfetch * k`` rows. Pass precomputed
-    ``codebooks``/``codes`` (the persisted-store path) to skip
-    training and encoding."""
-    from .dedup import _track_caches
+    Plan shape — prune inside each partition, merge only the
+    survivors (REPOSE, ICDE 2021): the driver trains (or collects) the
+    codebook and builds the ``(n_queries, m, k)`` lookup table from
+    the collected query vectors; ONE map-only ``mapInArrow`` pass
+    encodes each vector (or reads ``codes``), sums its ``m`` table
+    entries per query and emits only the partition's top ``T =
+    overfetch * k`` rows per query (``k`` without re-rank) by (adc,
+    vec_id); a ``row_number`` window picks the global top T, and the
+    re-rank touches ``n_queries * T`` rows. ``n_cells`` adds a ``cid``
+    column to the scan, and the kernel masks the cells each query does
+    not probe. Pass precomputed ``codebooks``/``codes`` (the
+    persisted-store path) to skip training and encoding.
 
-    # ONE persisted _prepared frame shared by codebook training, the
-    # encode pass, the query side, the IVF branch and the float
-    # re-rank (r14: five separate _prepared subtrees each re-ran the
-    # scan + as_double + norm; the codebook sample's bounded collect
-    # is the eager job that populates the cache for every later
-    # consumer). Released via the _track_caches handle. r15: the
-    # embedding_near_dup re-adjudication dropped the SAME vector-frame
-    # shape there, so this persist was cold-JVM A/B'd too ("prep" vs
-    # "none") — here it SURVIVED: five consumers and the mid-build
-    # collect make the cache pay (OPTIMIZATION_r15.md has the table);
-    # knob kept for re-tuning.
-    prep = _prepared(emb)
-    if getattr(pq_topk, "_cache_strategy", "prep") == "prep":
-        prep = prep.persist()
+    ``adc_micro_rank`` ranks candidates by the MICRO-ROUNDED distance
+    with vec_id tiebreak, a total order another engine's summation
+    order agrees on (the fixture-pinned driver row asserts no adc sum
+    sits near a half-micro boundary). Each partition then also keeps
+    every row within 2e-6 of its T-th distance: a row past that margin
+    rounds strictly above T rows of its own partition, so no row the
+    rounded global window picks is cut."""
     if codebooks is None:
-        codebooks = pq_codebooks(emb, m=m, k=n_codes, prepared=prep)
-    if codes is None:
-        codes = pq_encode(emb, codebooks, prepared=prep)
-
-    mm = _pq_m(codebooks)
-    dim_row = emb.select(F.size("embedding").alias("s")).first()
-    if dim_row is None:
-        # mirror pq_encode's empty-frame guard: no vectors means no
-        # queries and no candidates — an empty result, not a NoneType
-        # subscript
-        prep.unpersist()
+        books = _pq_train(emb, m, n_codes)
+    else:
+        books = _pq_books(codebooks)
+    scan = emb.select("vec_id", "embedding")
+    qrows = sorted(scan.filter(F.col("vec_id") < n_queries).collect())
+    if not qrows:  # no vectors, no queries: an empty result
         return emb.sparkSession.createDataFrame(
             [], "query_id long, vec_id long, cosine_micro long, rank int"
         )
-    dsub = dim_row["s"] // mm
-    unit = prep.select(
-        "vec_id", F.transform(F.col("v"), lambda x: x / F.col("nrm")).alias("u")
-    )
-    q = unit.filter(F.col("vec_id") < n_queries)
-    qsubs = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).cast("int").alias("sub"),
-                        F.slice(F.col("u"), j * dsub + 1, dsub).alias("qx"),
-                    )
-                    for j in range(mm)
-                ]
-            )
-        ).alias("s"),
-    ).select("query_id", "s.sub", "s.qx")
-    lut = qsubs.join(F.broadcast(codebooks), "sub").select(
-        "query_id",
-        "sub",
-        "code",
-        F.aggregate(
-            F.zip_with(
-                F.col("qx"), F.col("sv"), lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0.0),
-            lambda acc, y: acc + y,
-        ).alias("d2"),
-    )
-    exploded = codes.select(
-        "vec_id", F.posexplode("codes").alias("sub", "code")
-    ).withColumn("sub", F.col("sub").cast("int"))
+    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
+    qu = _pq_unit(np.array([r["embedding"] for r in qrows], np.float64))
+    lut = _pq_lut(qu, books)
+    if codes is not None:
+        scan = codes.select("vec_id", "codes")
+    cells = None
     if n_cells is not None:
-        e = prep
-        db_cells = ivf_assignments(e, n_centroids=n_cells, probes=1)
+        e = _prepared(emb, None)
+        cents = e.filter(F.col("vec_id") < n_cells).select(
+            F.col("vec_id").alias("cid"),
+            F.col("v").alias("cv"),
+            F.col("nrm").alias("cnrm"),
+        )
+        scan = scan.join(ivf_assignments(e, probes=1, centroids=cents), "vec_id")
         q_cells = ivf_assignments(
-            e.filter(F.col("vec_id") < n_queries),
-            n_centroids=n_cells,
-            probes=probes,
-            centroids=e.filter(F.col("vec_id") < n_cells).select(
-                F.col("vec_id").alias("cid"),
-                F.col("v").alias("cv"),
-                F.col("nrm").alias("cnrm"),
-            ),
-        ).withColumnsRenamed({"vec_id": "query_id"})
-        # tag each code row with its one cell (vec_id-co-keyed join),
-        # then keep only rows inside a probed cell of each query
-        exploded = exploded.join(db_cells, "vec_id")
-        adc = (
-            exploded.join(F.broadcast(lut), ["sub", "code"])
-            .join(F.broadcast(q_cells), ["query_id", "cid"])
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .groupBy("query_id", "vec_id")
-            .agg(F.sum("d2").alias("adc_d2"))
-        )
-    else:
-        adc = (
-            exploded.join(F.broadcast(lut), ["sub", "code"])
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .groupBy("query_id", "vec_id")
-            .agg(F.sum("d2").alias("adc_d2"))
-        )
-    # adc_micro_rank (VERDICT r13 #6): candidate selection by the
-    # MICRO-ROUNDED distance with vec_id tiebreak instead of the raw
-    # double — the sum of m lookup doubles folds in nondeterministic
-    # order (map-side combine), so a raw-double orderBy could flip
-    # near-tied candidates run-to-run and engine-to-engine; rounding
-    # first makes the overfetch boundary a total order both engines
-    # agree on (the fixture-pinned driver row asserts no adc sum sits
-    # near a half-micro boundary, so the rounding itself can't flip).
+            e.filter(F.col("vec_id") < n_queries), probes=probes, centroids=cents
+        ).collect()
+        cell_ids = np.unique([r["cid"] for r in q_cells]).astype(np.int64)
+        probed = np.zeros((len(qids), len(cell_ids)), dtype=bool)
+        for r in q_cells:
+            i = np.searchsorted(qids, r["vec_id"])
+            probed[i, np.searchsorted(cell_ids, r["cid"])] = True
+        cells = (cell_ids, probed)
+
+    t = overfetch * k if rerank else k
+    adc = scan.mapInArrow(
+        _pq_scorer(books, qids, lut, t, 2e-6 if adc_micro_rank else 0.0, cells),
+        "query_id long, vec_id long, adc_d2 double",
+    )
     adc_rank_col = (
         micro_units(F.col("adc_d2")) if adc_micro_rank else F.col("adc_d2")
     )
     w_adc = Window.partitionBy("query_id").orderBy(
         adc_rank_col.asc(), F.col("vec_id")
     )
-    cand = (
-        adc.withColumn("rank", F.row_number().over(w_adc))
-        .filter(F.col("rank") <= (overfetch * k if rerank else k))
-        .select("query_id", "vec_id")
+    cand = adc.withColumn("rank", F.row_number().over(w_adc)).filter(
+        F.col("rank") <= t
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_micro").desc(), F.col("vec_id")
     )
     if not rerank:
         # approximate scores straight from ADC (unit vectors):
         # cos = 1 - d2/2
-        return _track_caches(
-            adc.join(F.broadcast(cand), ["query_id", "vec_id"])
-            .select(
-                "query_id",
-                "vec_id",
-                micro_units(1 - F.col("adc_d2") / 2).alias("cosine_micro"),
-            )
-            .withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy("query_id").orderBy(
-                        F.col("cosine_micro").desc(), F.col("vec_id")
-                    )
-                ),
-            ),
-            prep,
-        )
-    # the float re-rank side reads the SAME persisted frame (fv == v,
-    # fn == nrm by construction — as_double then norm)
-    fl = prep.select(
-        "vec_id", F.col("v").alias("fv"), F.col("nrm").alias("fn")
-    )
+        return cand.select(
+            "query_id",
+            "vec_id",
+            micro_units(1 - F.col("adc_d2") / 2).alias("cosine_micro"),
+        ).withColumn("rank", F.row_number().over(w))
+    fl = emb.select("vec_id", VX.as_double(F.col("embedding")).alias("fv"))
+    fl = fl.withColumn("fn", VX.norm(F.col("fv")))
     qf = fl.withColumnsRenamed({"vec_id": "query_id", "fv": "qfv", "fn": "qfn"})
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_micro").desc(), F.col("vec_id")
-    )
-    return _track_caches(
-        fl.join(F.broadcast(cand), "vec_id")
+    return (
+        fl.join(F.broadcast(cand.select("query_id", "vec_id")), "vec_id")
         .join(F.broadcast(qf.filter(F.col("query_id") < n_queries)), "query_id")
         .withColumn(
             "cosine_micro",
@@ -1339,8 +1340,7 @@ def pq_topk(
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine_micro", "rank"),
-        prep,
+        .select("query_id", "vec_id", "cosine_micro", "rank")
     )
 
 
@@ -1367,10 +1367,9 @@ def write_pq_index(
     parameters. Batches append; ``hygiene.compact_index`` (flat,
     ``part_col=None``) handles the small-files pass, and readers go
     through ``hygiene.read_index_resolved`` because duplicate code
-    rows are NOT harmless here: the ADC fold sums ``m`` partial
-    distances per vector, so a compaction-crash survivor batch would
-    double every affected distance (the same SUM-folding hazard as
-    the BM25/classifier ledgers)."""
+    rows are NOT harmless here: a compaction-crash survivor batch
+    would score every affected vector twice, crowding real neighbours
+    out of the overfetched candidates and duplicating re-ranked rows."""
     from pyspark.errors import AnalysisException
 
     spark = emb.sparkSession
@@ -1396,7 +1395,7 @@ def read_pq_index(spark, index_path: str):
     plug both straight into :func:`pq_topk`. Codes read through
     ``hygiene.read_index_resolved`` (compaction-crash survivors
     excluded — see :func:`write_pq_index` for why duplicates corrupt
-    ADC distances); raises on an absent index, the house probe rule."""
+    the ADC candidates); raises on an absent index, the house probe rule."""
     from pyspark.errors import AnalysisException
 
     from .hygiene import read_index_resolved

@@ -405,10 +405,13 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = Catalog(spark, sf_dir).events
     by_user = Window.partitionBy("user_id").orderBy("ts")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(by_user)
+    # microsecond gaps: whole-second casts would truncate a 1800.5 s
+    # gap to 1800 and miss the oracle's "> INTERVAL 30 MINUTE" break
+    us = F.unix_micros("ts")
+    gap = us - F.lag(us).over(by_user)
     flagged = ev.withColumn(
         "is_new",
-        F.when(gap.isNull() | (gap > 30 * 60), 1).otherwise(0),
+        F.when(gap.isNull() | (gap > 30 * 60 * 1_000_000), 1).otherwise(0),
     )
     sessions = flagged.withColumn(
         "session_nbr",

@@ -643,8 +643,9 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 by product quantization + asymmetric distance — the
     IVF-PQ billion-scale recipe (Jégou 2011): the corpus scans as
-    8-byte PQ codes (32x fewer bytes than float32 at dim 64), each
-    query's m x k lookup table broadcasts, ADC ranks, and the exact
+    8-byte PQ codes (32x fewer bytes than float32 at dim 64), one
+    Arrow scorer pass ranks by ADC against each query's m x k lookup
+    table and keeps only each partition's top rows, and the exact
     float re-rank of the overfetched tail makes every reported score
     exact (similarity.pq_topk). REGISTRY-ONLY, deliberately no DuckDB
     oracle: the per-subspace k-means codebooks are iterative (the
@@ -5349,7 +5350,7 @@ def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: train once, encode everything), each query's m x k lookup
     table rebuilds from the frozen codebook in both engines, ADC ranks
     by the MICRO-ROUNDED distance sum (adc_micro_rank=True — the sum
-    of m lookup doubles folds in nondeterministic order, so the raw
+    of m lookup doubles folds in an engine-specific order, so the raw
     double is not a cross-engine ordering key; the micro-boundary
     margin is pytest-asserted on the frozen data), and the exact float
     re-rank of the 4x10 overfetch makes every reported score exact.

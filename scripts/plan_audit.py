@@ -32,8 +32,9 @@ Also counted per query (informational, not failures):
                                     or the audit FAILS (the one gap an
                                     unbounded O(n*m) regression could
                                     previously slip through);
-  * ``ArrowEvalPython`` / ``MapInPandas`` — the sanctioned Python
-                                    boundary (codec/as-of), listed to
+  * ``ArrowEvalPython`` / ``MapInPandas`` / ``MapInArrow`` — the
+                                    sanctioned Python boundary
+                                    (codec/as-of/PQ scorer), listed to
                                     keep its footprint visible.
 
 Exit 1 when any hard anti-pattern appears. Usage:
@@ -62,6 +63,7 @@ WATCH = (
     "BroadcastNestedLoopJoin",
     "ArrowEvalPython",
     "MapInPandas",
+    "MapInArrow",
     "FlatMapGroupsInPandas",
     "SortMergeJoin",
     "BroadcastHashJoin",

@@ -1445,6 +1445,130 @@ def test_pq_index_store_round_trip_and_compaction(spark, tmp_path):
     assert probe() == before
 
 
+def test_pq_topk_rows_independent_of_partitioning(spark):
+    """pq_topk's scorer keeps only each partition's top rows per query
+    before the global window, so its output must not depend on how the
+    input is partitioned: one partition, seven, and seven with AQE off
+    give the same rows — encoding in the scan, with given codes, under
+    adc_micro_rank, and on the IVF path."""
+    from jonesy_spark.operators import similarity as SIM
+
+    emb = Catalog(spark, SF_DIR).embeddings
+    books = SIM.pq_codebooks(emb, m=8, k=16)
+    codes = SIM.pq_encode(emb, books)
+    cases = {
+        "encode": {"codebooks": books},
+        "codes": {"codebooks": books, "codes": codes},
+        "micro": {"codebooks": books, "adc_micro_rank": True, "rerank": False},
+        "ivf": {"codebooks": books, "n_cells": 8, "probes": 3},
+    }
+
+    def run(n_parts):
+        out = {}
+        for name, kw in cases.items():
+            kw = dict(kw)
+            if "codes" in kw:
+                kw["codes"] = kw["codes"].repartition(n_parts)
+            df = SIM.pq_topk(emb.repartition(n_parts), k=5, n_queries=4, **kw)
+            out[name] = sorted(map(tuple, df.collect()))
+        return out
+
+    one = run(1)
+    assert all(one.values())
+    assert run(7) == one
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert run(7) == one
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def test_pq_encode_reproduces_frozen_fixture_codes(spark):
+    """A fresh encode of the committed ANN store under its committed
+    codebook equals the frozen ``codes`` column for every vector."""
+    from jonesy_spark.operators import similarity as SIM
+    from jonesy_spark.plans.llm_queries import (
+        ANN_CODEBOOKS_FIXTURE,
+        ANN_STORE_FIXTURE,
+    )
+
+    store = spark.read.parquet(ANN_STORE_FIXTURE)
+    fresh = SIM.pq_encode(
+        store.select("vec_id", "embedding", "label"),
+        spark.read.parquet(ANN_CODEBOOKS_FIXTURE),
+    )
+    frozen = sorted((r["vec_id"], list(r["codes"])) for r in store.collect())
+    assert len(frozen) == 500
+    assert sorted((r["vec_id"], list(r["codes"])) for r in fresh.collect()) == frozen
+
+
+def test_ann_pq_topk_leaves_no_persisted_rdds(spark):
+    """The registry PQ row persists nothing: collecting it adds no
+    persisted RDD to the session."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    before = persisted()
+    assert all_queries()["ann_pq_topk"](spark, SF_DIR).collect()
+    assert persisted() - before == set()
+
+
+def test_pq_topk_micro_rank_ties_across_partitions(spark):
+    """Under adc_micro_rank two vectors whose ADC distances differ by
+    less than one micro-unit tie, and the lower vec_id wins even though
+    its raw distance is larger. The per-partition cut must keep it
+    whether the tied pair shares a partition or not, so every layout
+    returns the single-partition answer."""
+    import math
+
+    from jonesy_spark.operators import similarity as SIM
+
+    sc = spark.sparkContext
+    # dim 2, m=2 (one coordinate per subspace); the query is (1, 0)
+    books = spark.createDataFrame(
+        [
+            (0, 0, [0.9]),  # d2 0.01
+            (0, 1, [1 - math.sqrt(0.0100004)]),  # d2 0.0100004
+            (0, 2, [-1.0]),  # d2 4
+            (1, 0, [0.0]),
+            (1, 1, [0.5]),
+            (1, 2, [1.0]),
+        ],
+        "sub int, code int, sv array<double>",
+    )
+    code_of = {
+        0: [0, 0], 1: [2, 0], 2: [1, 0], 3: [2, 1],
+        4: [0, 2], 5: [2, 2], 6: [1, 2], 7: [0, 0],
+    }
+    emb = spark.createDataFrame(
+        [(i, [1.0, 0.0] if i == 0 else [0.0, 1.0], 0) for i in code_of],
+        "vec_id long, embedding array<float>, label int",
+    )
+
+    def top(order, n_parts, micro=True):
+        codes = spark.createDataFrame(
+            sc.parallelize([(i, code_of[i]) for i in order], n_parts),
+            "vec_id long, codes array<int>",
+        )
+        return [
+            (r["query_id"], r["vec_id"], r["rank"])
+            for r in SIM.pq_topk(
+                emb, k=1, n_queries=1, rerank=False, codebooks=books,
+                codes=codes, adc_micro_rank=micro,
+            ).collect()
+        ]
+
+    single = top(range(8), 1)
+    assert single == [(0, 2, 1)]
+    assert top([7, 1, 3, 4, 2, 0, 5, 6], 2) == single  # pair split
+    assert top([7, 2, 1, 3, 0, 4, 5, 6], 2) == single  # pair together
+    # the raw distance orders the pair the other way
+    assert top([7, 1, 3, 4, 2, 0, 5, 6], 2, micro=False) == [(0, 7, 1)]
+
+
 def test_sliding_window_rollup_matches_explicit_hops(spark):
     """Catalyst's native window(ts, size, slide) lowering equals the
     closed-form hop explode — floor_S(es) - k*S for k in 0..W/S-1 —

@@ -493,6 +493,23 @@ def test_spread_probes_file_metadata_not_rdd(spark, tmp_path):
     many = spark.read.parquet(many_path)
     assert len(many.inputFiles()) >= target
     assert spread(many) is many  # no-op before any file is stat'ed
+
+
+def test_conf_bytes_reads_spark_size_suffixes():
+    """spread()'s size-setting parser: two-letter suffixes match before
+    the one-letter ones ("128mb" once crashed on int("128m")), and a
+    bare number is a byte count."""
+    from jonesy_spark.catalog import _conf_bytes
+
+    assert _conf_bytes("128mb") == 128 * 1024**2
+    assert _conf_bytes("64m") == 64 * 1024**2
+    assert _conf_bytes("1g") == 1024**3
+    assert _conf_bytes("4194304") == 4194304
+    assert _conf_bytes("2KB") == 2048
+    assert _conf_bytes("512b") == 512
+
+
+def test_verify_guard_keeps_expensive_expr_out_of_join_conditions(spark):
     """r14 verify-stage single-evaluation guard (dedup._eval_once):
     each pair operator's threshold filter used to be pushed into the
     candidate/re-attach join as a residual condition, DUPLICATING the

@@ -61,3 +61,49 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     assert df.count() > 0
     assert len(df.schema) > 0
+
+
+def test_events_sessionization_breaks_on_sub_second_gap(spark, tmp_path):
+    """A gap of 1800.5 s opens a new session, as the oracle's
+    ``> INTERVAL 30 MINUTE`` does; exactly 1800 s does not. The gap is
+    compared in microseconds, so whole-second truncation cannot merge
+    a session the oracle splits."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # per user: microsecond gaps between consecutive events
+    gaps = {
+        1: [1_800_500_000, 10_000_000],
+        2: [1_800_000_000, 1_800_000_001],
+        3: [1_801_000_000, 1_799_999_999],
+    }
+    t0 = 1_704_067_200_000_000  # 2024-01-01 00:00:00 UTC
+    users, ts = [], []
+    for user, steps in gaps.items():
+        t = t0
+        for step in [0] + steps:
+            t += step
+            users.append(user)
+            ts.append(t)
+    n = len(ts)
+    table = pa.table(
+        {
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "user_id": pa.array(users, pa.int64()),
+            "event_type": pa.array(["click"] * n),
+            "value": pa.array([1.0] * n),
+            "props": pa.array(["{}"] * n),
+        }
+    )
+    pq.write_table(table, tmp_path / "events.parquet")
+
+    df = QUERIES["events_sessionization"](spark, str(tmp_path))
+    assert df.count() == 6  # two sessions per user
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'"
+    )
+    assert_matches_oracle(df, con, ORACLE["events_sessionization"])
+    con.close()

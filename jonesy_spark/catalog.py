@@ -141,45 +141,74 @@ def spread(df: DataFrame, *key_cols) -> DataFrame:
     row placement, reusable by a downstream groupBy on the same key);
     without, round-robin.
 
-    The planned-layout probe is a FILE-METADATA estimate (r15, VERDICT
-    r14 #8): the old ``df.rdd.getNumPartitions()`` forced a
-    DataFrame→RDD conversion plan per call and read the pre-AQE
-    layout. Every call site feeds a file-source scan, whose split
-    count Spark derives from file sizes alone
-    (``FilePartition.maxSplitBytes``: ``min(maxPartitionBytes,
-    max(openCostInBytes, totalBytes / minPartitionNum))``), so the
-    same arithmetic over ``df.inputFiles()`` + HDFS file status
-    reproduces the planned count without touching the RDD API. A
-    frame with >= target input files is a no-op before any size is
-    stat'ed; a frame with NO file source (not a current call site)
-    falls back to the RDD probe.
+    The planned layout comes from file metadata, not from
+    ``df.rdd.getNumPartitions()``, which builds a DataFrame→RDD
+    conversion plan per call and reads the pre-AQE layout; see
+    :func:`_planned_partitions`.
     """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    files = df.inputFiles()
-    if len(files) >= target:
-        return df
-    if not files:
-        if df.rdd.getNumPartitions() >= target:
-            return df
-        return df.repartition(target, *key_cols) if key_cols else df.repartition(target)
-
-    conf = spark.conf.get
-    max_part = _conf_bytes(conf("spark.sql.files.maxPartitionBytes", "128m"))
-    open_cost = _conf_bytes(conf("spark.sql.files.openCostInBytes", "4m"))
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    sizes = []
-    for f in files:
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        sizes.append(p.getFileSystem(hconf).getFileStatus(p).getLen())
-    total = sum(sizes) + open_cost * len(sizes)
-    bytes_per_core = total // max(target, 1)
-    max_split = min(max_part, max(open_cost, bytes_per_core))
-    est_splits = sum(-(-(s + open_cost) // max_split) for s in sizes)
-    if est_splits >= target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if _planned_partitions(df) >= target:
         return df
     return df.repartition(target, *key_cols) if key_cols else df.repartition(target)
+
+
+def _planned_partitions(df: DataFrame) -> int:
+    """Partitions Spark plans for the file scan behind ``df``, from the
+    sizes of ``df.inputFiles()``: the same arithmetic as
+    ``FilePartition.maxSplitBytes`` and ``getFilePartitions``. A frame
+    with no file source, or a session whose ``_jvm``/``_jsc`` bridge
+    raises (Spark Connect, a failed stat), falls back to the RDD
+    probe."""
+    from py4j.protocol import Py4JError
+
+    spark = df.sparkSession
+    files = df.inputFiles()
+    try:
+        sizes = _file_sizes(spark, files)
+    except (AttributeError, Py4JError):
+        sizes = []
+    if not sizes:
+        return df.rdd.getNumPartitions()
+    conf = spark.conf.get
+    min_parts = (
+        conf("spark.sql.files.minPartitionNum", None)
+        or conf("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    return _planned_splits(
+        sizes,
+        int(min_parts),
+        _conf_bytes(conf("spark.sql.files.maxPartitionBytes", "128m")),
+        _conf_bytes(conf("spark.sql.files.openCostInBytes", "4m")),
+    )
+
+
+def _file_sizes(spark: SparkSession, files: list[str]) -> list[int]:
+    """Byte lengths of ``files`` through the Hadoop FileSystem API."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    hconf = spark._jsc.hadoopConfiguration()
+    return [Path(f).getFileSystem(hconf).getFileStatus(Path(f)).getLen() for f in files]
+
+
+def _planned_splits(sizes, min_partitions: int, max_part: int, open_cost: int) -> int:
+    """Partitions of a splittable file scan over files of these byte
+    sizes. ``maxSplitBytes = min(max_part, max(open_cost, total /
+    min_partitions))`` with every file costing its length plus
+    ``open_cost``; each file is cut into splits of at most that size;
+    the splits, largest first, are packed Next Fit into partitions of
+    that capacity, each split costing its length plus ``open_cost``."""
+    total = sum(s + open_cost for s in sizes)
+    max_split = max(1, min(max_part, max(open_cost, total // max(min_partitions, 1))))
+    splits = sorted(
+        (min(max_split, s - off) for s in sizes for off in range(0, s, max_split)),
+        reverse=True,
+    )
+    parts, current = 0, None
+    for length in splits:
+        if current is not None and current + length > max_split:
+            parts, current = parts + 1, None
+        current = (current or 0) + length + open_cost
+    return parts + (current is not None)
 
 
 def write_format(df: DataFrame, path: str, fmt: str = "parquet") -> str:

@@ -1,20 +1,21 @@
-"""Vector math over ``array<float>`` embedding columns — pure built-in
-higher-order functions (zip_with / aggregate), fully JVM-side codegen.
+"""Vector math over ``array<float>`` embedding columns as built-in
+higher-order functions (zip_with / aggregate / transform).
 
-No UDFs: a Pandas-UDF dot product pays an Arrow round-trip per batch;
-``F.aggregate`` stays inside whole-stage codegen, which at 100 TB is the
-difference between a map-only scan and a Python bottleneck. The fold is
-sequential left-to-right, so results are bit-deterministic for the
-oracle comparison (we still round at the boundary).
+These folds are NOT compiled: in Spark 4.1 ``ArrayAggregate``,
+``ZipWith`` and ``ArrayTransform`` implement ``CodegenFallback``, so a
+``Project`` holding ``norm`` plans outside whole-stage codegen (no
+``*(n)`` prefix in ``explain()``) and every element is interpreted.
+They stay the right tool for per-pair scores inside joins and for the
+expressions the DuckDB oracles mirror. Corpus-sized vector math — the
+brute-force cosine scan, the int8 and PQ candidate scans, their exact
+re-rank and the PQ training sample — runs in the NumPy kernel of
+``operators.similarity`` instead (``_fold_dot`` over Arrow batches in
+``mapInArrow``). That kernel folds in the same left-to-right order, one
+rounding per step, so its norms, cosines, unit vectors and codes match
+these expressions bit for bit.
 
-The one exception is product quantization (``operators.similarity``
-``pq_encode``/``pq_topk``): an argmin over ``k`` code words per
-subspace and a lookup-table gather per (query, vector) are a vectorized
-NumPy kernel over a whole Arrow batch, while the same work as per-row
-higher-order folds (an interpreted fold over the code words) measured
-slower than the exploded joins it was meant to replace. The kernel
-folds in the same left-to-right order, so its unit vectors and codes
-match these expressions bit for bit.
+The fold is sequential left-to-right, so results are bit-deterministic
+for the oracle comparison (we still round at the boundary).
 """
 
 from __future__ import annotations
@@ -78,7 +79,8 @@ def quantize_int8(v: Column) -> Column:
     path here re-ranks candidates anyway, so quantization error only
     moves CANDIDATE selection, never final scores, when the float
     originals are kept for verification. Pure built-ins (transform /
-    array_max) — whole-stage codegen, no Python.
+    array_max), no Python; the transform is interpreted like every
+    fold here.
 
     All-zero vectors take the 1e-30 floor scale so the round trip is
     exact (every q is 0) rather than 0/0; vectors whose max magnitude

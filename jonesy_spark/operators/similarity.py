@@ -2,9 +2,10 @@
 
 Two tiers, per SURVEY.md §7 Phase 5:
   * brute-force cosine top-k — exact baseline; the query side is tiny
-    and broadcast, so the corpus is scanned once, map-only, then a
-    rank-within-query window picks k. Linear in corpus size; this IS
-    the right plan up to ~10^7×10^2 pairs.
+    and collected once, so the corpus is scanned once, map-only, by
+    the NumPy kernel below, then a rank-within-query window picks k.
+    Linear in corpus size; this IS the right plan up to ~10^7×10^2
+    pairs.
   * sign-bucketed (IVF/LSH-style) top-k — the scale path: both sides
     bucket on deterministic coordinate signs, equi-join on the bucket
     key, search within buckets. Recall < 1.0 by construction;
@@ -15,12 +16,173 @@ Two tiers, per SURVEY.md §7 Phase 5:
 from __future__ import annotations
 
 import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as VX
 from ..functions.scalars import micro_units
 from .dedup import _micro_threshold
+
+# The vector kernel: NumPy over Arrow batches. Every reduction folds left
+# to right like VX.dot's aggregate(zip_with(...)), never np.dot or BLAS,
+# so norms, cosines, unit vectors and codes are bit-identical to the
+# Spark expressions and the DuckDB oracles' list folds.
+
+
+def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Dot products over the last axis (other axes broadcast), folded
+    like ``VX.dot``."""
+    acc = 0.0
+    for t in range(a.shape[-1]):
+        acc = acc + a[..., t] * b[..., t]
+    return acc
+
+
+def _fold_norm(x: np.ndarray) -> np.ndarray:
+    return np.sqrt(_fold_dot(x, x))
+
+
+def _ids(b, col: str = "vec_id") -> np.ndarray:
+    return b.column(col).to_numpy().astype(np.int64)
+
+
+def _vectors(b, col: str = "embedding") -> np.ndarray:
+    """(n, d) doubles of an Arrow batch or table's list column ``col``,
+    or of its int8 ``qv`` struct dequantized as ``VX.dequantize_int8``
+    does."""
+    v = b.column(col)
+    if col == "qv":
+        q = pc.list_flatten(pc.struct_field(v, "q")).to_numpy()
+        scale = pc.struct_field(v, "scale").to_numpy().astype(np.float64)
+        return q.astype(np.float64).reshape(len(v), -1) * scale[:, None]
+    if v.null_count:
+        raise ValueError(f"null {col}: a vector store row has no vector")
+    return pc.list_flatten(v).to_numpy().astype(np.float64).reshape(len(v), -1)
+
+
+def _cosine(qx: np.ndarray):
+    """``x -> (q, n)``: ``VX.dot(q, x) / (VX.norm(q) * VX.norm(x))``
+    for the query rows ``qx`` against rows ``x``."""
+    qn = _fold_norm(qx)
+    return lambda x: _fold_dot(qx[:, None, :], x[None, :, :]) / (
+        qn[:, None] * _fold_norm(x)[None, :]
+    )
+
+
+def _keep_top(qid, vid, key, t, margin) -> np.ndarray:
+    """Indices of each query's first ``t`` rows by (key, vec_id), plus
+    every NaN key (a zero vector still fails ``micro_units`` loudly)
+    and every row within ``margin`` of the t-th key: 2e-6 when the
+    global window ranks micro-rounded keys, as a row past it rounds
+    behind t rows of its own partition."""
+    order = np.lexsort((vid, key, qid))
+    qs, a = qid[order], key[order]
+    new = np.r_[True, qs[1:] != qs[:-1]]
+    starts = np.flatnonzero(new)
+    grp = np.cumsum(new) - 1
+    keep = (np.arange(len(order)) - starts[grp] < t) | np.isnan(a)
+    if margin:
+        last = np.r_[starts[1:], len(order)] - 1
+        keep |= a <= a[np.minimum(starts + t - 1, last)][grp] + margin
+    return order[keep]
+
+
+def _top_rows(scan, qids, score, t, names, desc=False, margin=0.0, mask=None):
+    """One map-only ``mapInArrow`` pass: ``score(batch)`` gives one
+    (query, row) matrix per column of ``names``; self pairs and pairs
+    ``mask(batch, vec_id)`` rejects drop out, and each partition emits
+    its :func:`_keep_top` rows by the first column (largest first when
+    ``desc``) as ``(query_id, vec_id, *names)``. Cutting per batch
+    keeps the rows one cut would: a dropped row trails ``t`` rows, and
+    the t-th key only improves."""
+    sign = -1.0 if desc else 1.0
+
+    def body(batches):
+        import pyarrow as pa
+
+        kept = [np.empty(0, np.int64)] * 2 + [np.empty(0)] * len(names)
+        for b in batches:
+            if not b.num_rows:
+                continue
+            vid = _ids(b)
+            ok = vid[None, :] != qids[:, None]
+            if mask is not None:
+                ok &= mask(b, vid)
+            qi, vi = np.nonzero(ok)
+            new = [qids[qi], vid[vi], *(m[qi, vi] for m in score(b))]
+            kept = [np.concatenate(pair) for pair in zip(kept, new)]
+            sel = _keep_top(kept[0], kept[1], sign * kept[2], t, margin)
+            kept = [c[sel] for c in kept]
+        if len(kept[0]):
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c) for c in kept], names=["query_id", "vec_id", *names]
+            )
+
+    doubles = "".join(f", {n} double" for n in names)
+    return scan.mapInArrow(body, f"query_id long, vec_id long{doubles}")
+
+
+def _ranked(df: DataFrame, order, t: int) -> DataFrame:
+    """Rows of ``df`` ranked per query by ``order`` then vec_id, rank <= t."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("vec_id"))
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= t)
+
+
+def _by_cosine(scored: DataFrame, t: int, col: str = "cosine") -> DataFrame:
+    """Each query's top ``t`` rows by the micro-rounded ``col``."""
+    micro = micro_units(F.col(col)).alias("cosine_micro")
+    return _ranked(
+        scored.select("query_id", "vec_id", micro), F.col("cosine_micro").desc(), t
+    )
+
+
+def _no_rows(spark) -> DataFrame:
+    return spark.createDataFrame(
+        [], "query_id long, vec_id long, cosine_micro long, rank int"
+    )
+
+
+def _rerank(emb: DataFrame, cand: DataFrame, k: int, queries) -> DataFrame:
+    """The exact tail over a separate store: re-score the ``(query_id,
+    vec_id)`` candidates on the float originals of ``emb`` (collected
+    query rows ``queries``), keeping each query's top ``k``. The
+    candidates broadcast into the scan: map-side, no corpus shuffle."""
+    pairs = cand.select(F.col("query_id").alias("cand_of"), "vec_id")
+    scan = emb.select("vec_id", "embedding").join(F.broadcast(pairs), "vec_id")
+    qids, cosine = _ids(queries), _cosine(_vectors(queries))
+    scored = _top_rows(
+        scan, qids, lambda b: (cosine(_vectors(b)),), k, ["cosine"], desc=True,
+        margin=2e-6, mask=lambda b, vid: qids[:, None] == _ids(b, "cand_of"),
+    )
+    return _by_cosine(scored, k)
+
+
+def cosine_topk(
+    emb: DataFrame,
+    query_ids: list[int] | None = None,
+    k: int = 10,
+    n_queries: int = 10,
+) -> DataFrame:
+    """Exact brute-force cosine top-k for each query vector.
+
+    Queries (``query_ids``, or else 0 <= vec_id < n_queries) are
+    collected; one map-only NumPy scan keeps each partition's top k per
+    query, then a rank window over the rounded cosine with vec_id
+    tiebreak picks the global top k, deterministic across engines."""
+    vid, scan = F.col("vec_id"), emb.select("vec_id", "embedding")
+    wanted = (vid >= 0) & (vid < n_queries)
+    if query_ids is not None:
+        wanted = vid.isin(query_ids)
+    queries = scan.filter(wanted).toArrow()
+    if not queries.num_rows:
+        return _no_rows(emb.sparkSession)
+    cosine = _cosine(_vectors(queries))
+    scored = _top_rows(
+        scan, _ids(queries), lambda b: (cosine(_vectors(b)),), k, ["cosine"],
+        desc=True, margin=2e-6,
+    )
+    return _by_cosine(scored, k)
 
 
 def _prepared(emb: DataFrame, n_partitions: int | None = 64) -> DataFrame:
@@ -33,56 +195,6 @@ def _prepared(emb: DataFrame, n_partitions: int | None = 64) -> DataFrame:
         emb = emb.repartition(n_partitions)
     return emb.select(
         F.col("vec_id"), v.alias("v"), VX.norm(v).alias("nrm"), F.col("label")
-    )
-
-
-def cosine_topk(
-    emb: DataFrame,
-    query_ids: list[int] | None = None,
-    k: int = 10,
-    n_queries: int = 10,
-) -> DataFrame:
-    """Exact brute-force cosine top-k for each query vector.
-
-    Queries (vec_id < n_queries by default) are broadcast; ranking uses
-    the rounded cosine with vec_id tiebreak so top-k is total-ordered
-    and deterministic across engines.
-    """
-    e = _prepared(emb)
-    # the limit after each filter is a semantic no-op (vec_id is
-    # unique, so the filter already yields at most that many rows) but
-    # plants the structural boundedness proof the plan audit's BNLJ
-    # rule checks — the broadcast side is bounded BY THE PLAN, not by
-    # a data property a regression could silently change
-    if query_ids is not None:
-        q = e.filter(F.col("vec_id").isin(query_ids)).limit(len(query_ids))
-    else:
-        # the lower bound makes the no-op PROVABLE: without it, any
-        # negative vec_ids would let more than n_queries rows through
-        # the filter and the unordered limit would drop query rows
-        # nondeterministically
-        q = e.filter(
-            (F.col("vec_id") >= 0) & (F.col("vec_id") < n_queries)
-        ).limit(n_queries)
-    q = q.select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    scored = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cosine_micro",
-            micro_units(
-                VX.dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_micro").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine_micro", "rank")
     )
 
 
@@ -877,8 +989,8 @@ def quantize_embeddings(emb: DataFrame) -> DataFrame:
     """The int8 storage tier of the vector store: ``(vec_id, qv
     struct<q: array<tinyint>, scale: float>, label)`` — 4x smaller than
     float32 on disk and in shuffle. Candidate generation reads ONLY
-    this; exact verification joins the float originals back for the
-    survivors (``quantized_topk``), so quantization error can demote a
+    this; exact verification re-scores the survivors on the float
+    originals (``quantized_topk``), so quantization error can demote a
     borderline candidate but never distort a reported score."""
     return emb.select(
         "vec_id",
@@ -905,6 +1017,13 @@ def quantized_topk(
     ``n_queries * overfetch * k`` rows. Output schema matches
     :func:`cosine_topk` so :func:`ann_recall` compares them directly.
 
+    Plan shape: the store's query rows (0 <= vec_id < n_queries) are
+    collected; one map-only NumPy scan keeps each partition's top
+    candidates per query and a rank window the global ones. Quantizing
+    live, the float originals ride in that scan, which scores the exact
+    cosine too, so a second window re-ranks without another pass; a
+    separate ``store`` re-ranks through :func:`_rerank`.
+
     ``store`` is the persisted-store path (VERDICT r13 #6): pass a
     precomputed ``(vec_id, qv struct<q, scale>)`` frame to skip live
     quantization — the production shape (quantize at ingest, scan the
@@ -912,81 +1031,49 @@ def quantized_topk(
     round(x/scale) half-integer boundary from the cross-engine
     surface.
     """
-    if store is None:
-        store = quantize_embeddings(emb)
-    # CPU_PARTITIONS, not a literal: the dot-product scan is the
-    # CPU-dense stage this floor exists for (r14 — scale-parameterized
-    # with the rest of the forced-parallelism sites)
-    from .dedup import CPU_PARTITIONS
+    live, vid = store is None, F.col("vec_id")
+    qv = VX.quantize_int8(F.col("embedding")).alias("qv")
+    scan = emb.select(vid, "embedding", qv) if live else store.select(vid, "qv")
+    is_query = (vid >= 0) & (vid < n_queries)
+    queries = scan.filter(is_query).toArrow()
+    if not queries.num_rows:
+        return _no_rows(emb.sparkSession)
+    t = overfetch * k if rerank else k
+    fused = live and rerank
+    cos_q = _cosine(_vectors(queries, "qv"))
+    cos = _cosine(_vectors(queries)) if fused else None
 
-    store = store.repartition(CPU_PARTITIONS)
-    dq = VX.dequantize_int8(F.col("qv"))
-    e = store.select("vec_id", dq.alias("v")).withColumn("nrm", VX.norm(F.col("v")))
-    # limit = structural boundedness proof for the plan audit's BNLJ
-    # rule; the >= 0 bound makes the no-op provable for any unique
-    # vec_ids, not just non-negative ones (see cosine_topk)
-    q = e.filter(
-        (F.col("vec_id") >= 0) & (F.col("vec_id") < n_queries)
-    ).limit(n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv_vec"),
-        F.col("nrm").alias("qn"),
-    )
-    scored = e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).withColumn(
-        "cosine_micro",
-        micro_units(
-            VX.dot(F.col("qv_vec"), F.col("v")) / (F.col("qn") * F.col("nrm"))
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_micro").desc(), F.col("vec_id")
-    )
-    cand = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= (overfetch * k if rerank else k))
-        .select("query_id", "vec_id", "cosine_micro", "rank")
+    def score(b):
+        q = cos_q(_vectors(b, "qv"))
+        return (q, cos(_vectors(b))) if fused else (q,)
+
+    scored = _top_rows(
+        scan, _ids(queries), score, t, ["cosine_q", "cosine"][: 1 + fused],
+        desc=True, margin=2e-6,
     )
     if not rerank:
-        return cand
-    # exact tail: float originals for candidates only. The candidate
-    # set (n_queries * overfetch * k rows) broadcasts against the
-    # corpus-sized float table, so the re-rank is a map-side semi-scan,
-    # never a corpus shuffle.
-    fl = emb.select("vec_id", VX.as_double(F.col("embedding")).alias("fv"))
-    fl = fl.withColumn("fn", VX.norm(F.col("fv")))
-    qf = fl.withColumnsRenamed({"vec_id": "query_id", "fv": "qfv", "fn": "qfn"})
-    exact = (
-        fl.join(F.broadcast(cand.select("query_id", "vec_id")), "vec_id")
-        .join(F.broadcast(qf.filter(F.col("query_id") < n_queries)), "query_id")
-        .withColumn(
-            "cosine_micro",
-            micro_units(
-                VX.dot(F.col("qfv"), F.col("fv")) / (F.col("qfn") * F.col("fn"))
-            ),
-        )
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine_micro", "rank")
-    )
+        return _by_cosine(scored, k, "cosine_q")
+    cand = _ranked(scored, micro_units(F.col("cosine_q")).desc(), t)
+    if live:
+        return _by_cosine(cand, k)
+    fl = emb.select("vec_id", "embedding").filter(is_query).toArrow()
+    return _rerank(emb, cand, k, fl)
 
 
 def _pq_train(emb, m=8, k=16, seed=13, max_iter=8, n_train=4096) -> np.ndarray:
     """The ``(m, k, d)`` codebook array behind :func:`pq_codebooks`."""
     # deterministic md5-order sample, bounded collect (<= n_train rows)
     sample = (
-        _prepared(emb, None)
-        .select("vec_id", F.transform("v", lambda x: x / F.col("nrm")).alias("u"))
+        emb.select("vec_id", "embedding")
         .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
         .limit(n_train)
-        .collect()
+        .toArrow()
     )
-    if not sample:
+    if not sample.num_rows:
         raise ValueError(
             "pq_codebooks needs a non-empty embeddings frame to train on"
         )
-    X = np.array([r["u"] for r in sample], dtype=np.float64)
+    X = _pq_unit(_vectors(sample))
     if X.shape[1] % m != 0:
         raise ValueError(f"dim {X.shape[1]} not divisible by m={m} subspaces")
     d = X.shape[1] // m
@@ -1000,13 +1087,15 @@ def _pq_train(emb, m=8, k=16, seed=13, max_iter=8, n_train=4096) -> np.ndarray:
         rng = np.random.RandomState(
             (seed + j * 1_000_003) % (2**31 - 1)
         )
-        # k-means++ init, then Lloyd; empty clusters reseed to the
-        # farthest point so every code word stays live
+        # k-means++ init (nearest-center distances as a running min),
+        # then Lloyd; empty clusters reseed to the farthest point so
+        # every code word stays live
         centers = Xj[rng.choice(len(Xj), 1)]
+        d2 = ((Xj - centers[0]) ** 2).sum(-1)
         for _ in range(k - 1):
-            d2 = ((Xj[:, None, :] - centers[None, :, :]) ** 2).sum(-1).min(1)
             p = d2 / d2.sum() if d2.sum() > 0 else None
             centers = np.vstack([centers, Xj[rng.choice(len(Xj), p=p)]])
+            d2 = np.minimum(d2, ((Xj - centers[-1]) ** 2).sum(-1))
         for _ in range(max_iter):
             d2 = ((Xj[:, None, :] - centers[None, :, :]) ** 2).sum(-1)
             assign = d2.argmin(1)
@@ -1059,38 +1148,26 @@ def _pq_books(codebooks: DataFrame) -> np.ndarray:
     """Collect a ``(sub, code, sv)`` codebook frame into its
     ``(m, k, d)`` array, raising the house ValueError on an empty one.
     A code word missing from the frame stays +inf: never nearest."""
-    rows = codebooks.select("sub", "code", "sv").collect()
-    if not rows:
+    t = codebooks.select("sub", "code", "sv").toArrow()
+    if not t.num_rows:
         raise ValueError(
             "empty PQ codebooks frame — train one with pq_codebooks "
             "(or read a store that has landed its codebook) first"
         )
-    m = max(r["sub"] for r in rows) + 1
-    k = max(r["code"] for r in rows) + 1
-    books = np.full((m, k, len(rows[0]["sv"])), np.inf)
-    for r in rows:
-        books[r["sub"], r["code"]] = r["sv"]
+    sub, code, sv = _ids(t, "sub"), _ids(t, "code"), _vectors(t, "sv")
+    books = np.full((sub.max() + 1, code.max() + 1, sv.shape[1]), np.inf)
+    books[sub, code] = sv
     return books
 
 
-# The PQ kernel: NumPy over Arrow batches inside mapInArrow. Each
-# reduction folds left to right in the element order of the engine's
-# aggregate(zip_with(...)) folds, so unit vectors, distances and codes
-# are bit-identical to the Spark expressions (VX.norm, the codebook
-# sample, the fixture's frozen codes).
-
-
 def _pq_unit(x: np.ndarray) -> np.ndarray:
-    """Rows divided by their norm, folded like ``VX.norm``."""
-    acc = np.zeros(len(x))
-    for t in range(x.shape[1]):
-        acc = acc + x[:, t] * x[:, t]
-    return x / np.sqrt(acc)[:, None]
+    """Rows divided by their norm, as ``transform(v, x -> x / nrm)``."""
+    return x / _fold_norm(x)[:, None]
 
 
 def _pq_lut(u: np.ndarray, books: np.ndarray) -> np.ndarray:
     """(n, m, k) squared distances from each subvector of ``u`` to every
-    code word of its subspace."""
+    code word of its subspace, folded over the subvector."""
     m, k, d = books.shape
     acc = np.zeros((len(u), m, k))
     for t in range(d):
@@ -1103,13 +1180,9 @@ def _pq_codes(b, books: np.ndarray) -> np.ndarray:
     """(n, m) codes of an Arrow batch: its ``codes`` column, or else the
     nearest code word per subspace of each unit ``embedding`` (ties to
     the lowest code — argmin keeps the first minimum)."""
-    given = "codes" in b.schema.names
-    col = b.column("codes" if given else "embedding")
-    flat = col.flatten().to_numpy(zero_copy_only=False)
-    if given:
-        return flat.astype(np.int64).reshape(len(col), -1)
-    x = _pq_unit(flat.astype(np.float64).reshape(len(col), -1))
-    return _pq_lut(x, books).argmin(2)
+    if "codes" in b.schema.names:
+        return _vectors(b, "codes").astype(np.int64)
+    return _pq_lut(_pq_unit(_vectors(b)), books).argmin(2)
 
 
 def _pq_adc(lut: np.ndarray, codes: np.ndarray) -> np.ndarray:
@@ -1119,58 +1192,6 @@ def _pq_adc(lut: np.ndarray, codes: np.ndarray) -> np.ndarray:
     for j in range(1, codes.shape[1]):
         acc = acc + lut[:, j, codes[:, j]]
     return acc
-
-
-def _pq_keep(qid, vid, adc, t, margin) -> np.ndarray:
-    """Indices of each query's first ``t`` rows by (adc, vec_id), plus
-    every row within ``margin`` of that query's t-th distance."""
-    order = np.lexsort((vid, adc, qid))
-    qs, a = qid[order], adc[order]
-    new = np.r_[True, qs[1:] != qs[:-1]]
-    starts = np.flatnonzero(new)
-    grp = np.cumsum(new) - 1
-    keep = np.arange(len(order)) - starts[grp] < t
-    if margin:
-        last = np.r_[starts[1:], len(order)] - 1
-        keep |= a <= a[np.minimum(starts + t - 1, last)][grp] + margin
-    return order[keep]
-
-
-def _pq_scorer(books, qids, lut, t, margin, cells=None):
-    """The mapInArrow body of :func:`pq_topk`: encode (or read codes),
-    score every (query, vector) pair by ADC, drop each query's own
-    vector and unprobed cells, and emit the partition's
-    :func:`_pq_keep` rows. Cutting batch by batch keeps the same rows
-    as one cut over the partition: a dropped row already trails ``t``
-    rows, and the t-th distance only falls."""
-
-    def score(batches):
-        import pyarrow as pa
-
-        q, v, a = np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
-        for b in batches:
-            if not b.num_rows:
-                continue
-            vid = b.column("vec_id").to_numpy().astype(np.int64)
-            ok = vid[None, :] != qids[:, None]
-            if cells is not None:
-                cell_ids, probed = cells
-                cid = b.column("cid").to_numpy()
-                at = np.searchsorted(cell_ids, cid).clip(max=len(cell_ids) - 1)
-                ok &= probed[:, at] & (cell_ids[at] == cid)
-            qi, vi = np.nonzero(ok)
-            q = np.concatenate([q, qids[qi]])
-            v = np.concatenate([v, vid[vi]])
-            a = np.concatenate([a, _pq_adc(lut, _pq_codes(b, books))[qi, vi]])
-            sel = _pq_keep(q, v, a, t, margin)
-            q, v, a = q[sel], v[sel], a[sel]
-        if len(q):
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(q), pa.array(v), pa.array(a)],
-                names=["query_id", "vec_id", "adc_d2"],
-            )
-
-    return score
 
 
 def pq_encode(emb: DataFrame, codebooks: DataFrame) -> DataFrame:
@@ -1232,11 +1253,10 @@ def pq_topk(
     then the standard exact float re-rank on the overfetched tail.
 
     On unit vectors ``||q - x||^2 = 2 - 2 cos(q, x)``, so ranking by
-    ADC distance ascending approximates cosine descending; the
-    re-rank (same candidate-bounded broadcast tail as
-    :func:`quantized_topk`) makes every REPORTED score exact. Output
-    schema matches :func:`cosine_topk` so :func:`ann_recall` compares
-    all three tiers directly.
+    ADC distance ascending approximates cosine descending; the exact
+    re-rank makes every REPORTED score exact. Output schema matches
+    :func:`cosine_topk` so :func:`ann_recall` compares all three tiers
+    directly.
 
     ``n_cells`` switches on the FULL IVFPQ composition: database
     vectors land in one IVF cell each (:func:`ivf_assignments`,
@@ -1250,39 +1270,36 @@ def pq_topk(
     Plan shape — prune inside each partition, merge only the
     survivors (REPOSE, ICDE 2021): the driver trains (or collects) the
     codebook and builds the ``(n_queries, m, k)`` lookup table from
-    the collected query vectors; ONE map-only ``mapInArrow`` pass
-    encodes each vector (or reads ``codes``), sums its ``m`` table
-    entries per query and emits only the partition's top ``T =
-    overfetch * k`` rows per query (``k`` without re-rank) by (adc,
-    vec_id); a ``row_number`` window picks the global top T, and the
-    re-rank touches ``n_queries * T`` rows. ``n_cells`` adds a ``cid``
-    column to the scan, and the kernel masks the cells each query does
-    not probe. Pass precomputed ``codebooks``/``codes`` (the
-    persisted-store path) to skip training and encoding.
+    the collected query vectors; ONE map-only NumPy scan encodes each
+    vector (or reads ``codes``), sums its ``m`` table entries per query
+    and keeps each partition's top ``T = overfetch * k`` rows per query
+    (``k`` without re-rank) by (adc, vec_id), masking unprobed cells;
+    a ``row_number`` window picks the global top T. Encoding in the
+    scan, it also scores each kept row's exact cosine, so a second
+    window re-ranks without another pass; given ``codes``, the T
+    candidates re-rank through :func:`_rerank`.
 
     ``adc_micro_rank`` ranks candidates by the MICRO-ROUNDED distance
     with vec_id tiebreak, a total order another engine's summation
     order agrees on (the fixture-pinned driver row asserts no adc sum
-    sits near a half-micro boundary). Each partition then also keeps
-    every row within 2e-6 of its T-th distance: a row past that margin
-    rounds strictly above T rows of its own partition, so no row the
-    rounded global window picks is cut."""
+    sits near a half-micro boundary); each partition then also keeps
+    the rows within 2e-6 of its T-th distance (:func:`_keep_top`)."""
     if codebooks is None:
         books = _pq_train(emb, m, n_codes)
     else:
         books = _pq_books(codebooks)
     scan = emb.select("vec_id", "embedding")
-    qrows = sorted(scan.filter(F.col("vec_id") < n_queries).collect())
-    if not qrows:  # no vectors, no queries: an empty result
-        return emb.sparkSession.createDataFrame(
-            [], "query_id long, vec_id long, cosine_micro long, rank int"
-        )
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    qu = _pq_unit(np.array([r["embedding"] for r in qrows], np.float64))
-    lut = _pq_lut(qu, books)
+    queries = scan.filter(F.col("vec_id") < n_queries).toArrow()
+    if not queries.num_rows:  # no vectors, no queries: an empty result
+        return _no_rows(emb.sparkSession)
+    queries = queries.take(np.argsort(_ids(queries), kind="stable"))
+    qids, qx = _ids(queries), _vectors(queries)
+    lut = _pq_lut(_pq_unit(qx), books)
+    fused = rerank and codes is None
+    cos = _cosine(qx) if fused else None
     if codes is not None:
         scan = codes.select("vec_id", "codes")
-    cells = None
+    mask = None
     if n_cells is not None:
         e = _prepared(emb, None)
         cents = e.filter(F.col("vec_id") < n_cells).select(
@@ -1294,54 +1311,33 @@ def pq_topk(
         q_cells = ivf_assignments(
             e.filter(F.col("vec_id") < n_queries), probes=probes, centroids=cents
         ).collect()
-        cell_ids = np.unique([r["cid"] for r in q_cells]).astype(np.int64)
+        qc = np.array([(r["vec_id"], r["cid"]) for r in q_cells], np.int64)
+        cell_ids = np.unique(qc[:, 1])
         probed = np.zeros((len(qids), len(cell_ids)), dtype=bool)
-        for r in q_cells:
-            i = np.searchsorted(qids, r["vec_id"])
-            probed[i, np.searchsorted(cell_ids, r["cid"])] = True
-        cells = (cell_ids, probed)
+        at = np.searchsorted(qids, qc[:, 0]), np.searchsorted(cell_ids, qc[:, 1])
+        probed[at] = True
+
+        def mask(b, vid):
+            cid = b.column("cid").to_numpy()
+            at = np.searchsorted(cell_ids, cid).clip(max=len(cell_ids) - 1)
+            return probed[:, at] & (cell_ids[at] == cid)
+
+    def score(b):
+        adc = _pq_adc(lut, _pq_codes(b, books))
+        return (adc, cos(_vectors(b))) if fused else (adc,)
 
     t = overfetch * k if rerank else k
-    adc = scan.mapInArrow(
-        _pq_scorer(books, qids, lut, t, 2e-6 if adc_micro_rank else 0.0, cells),
-        "query_id long, vec_id long, adc_d2 double",
+    scored = _top_rows(
+        scan, qids, score, t, ["adc_d2", "cosine"][: 1 + fused],
+        margin=2e-6 if adc_micro_rank else 0.0, mask=mask,
     )
-    adc_rank_col = (
-        micro_units(F.col("adc_d2")) if adc_micro_rank else F.col("adc_d2")
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        adc_rank_col.asc(), F.col("vec_id")
-    )
-    cand = adc.withColumn("rank", F.row_number().over(w_adc)).filter(
-        F.col("rank") <= t
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_micro").desc(), F.col("vec_id")
+    cand = _ranked(
+        scored, micro_units(F.col("adc_d2")) if adc_micro_rank else F.col("adc_d2"), t
     )
     if not rerank:
-        # approximate scores straight from ADC (unit vectors):
-        # cos = 1 - d2/2
-        return cand.select(
-            "query_id",
-            "vec_id",
-            micro_units(1 - F.col("adc_d2") / 2).alias("cosine_micro"),
-        ).withColumn("rank", F.row_number().over(w))
-    fl = emb.select("vec_id", VX.as_double(F.col("embedding")).alias("fv"))
-    fl = fl.withColumn("fn", VX.norm(F.col("fv")))
-    qf = fl.withColumnsRenamed({"vec_id": "query_id", "fv": "qfv", "fn": "qfn"})
-    return (
-        fl.join(F.broadcast(cand.select("query_id", "vec_id")), "vec_id")
-        .join(F.broadcast(qf.filter(F.col("query_id") < n_queries)), "query_id")
-        .withColumn(
-            "cosine_micro",
-            micro_units(
-                VX.dot(F.col("qfv"), F.col("fv")) / (F.col("qfn") * F.col("fn"))
-            ),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine_micro", "rank")
-    )
+        # approximate scores straight from ADC (unit vectors): cos = 1 - d2/2
+        return _by_cosine(cand.withColumn("cosine", 1 - F.col("adc_d2") / 2), k)
+    return _by_cosine(cand, k) if fused else _rerank(emb, cand, k, queries)
 
 
 def write_pq_index(

@@ -54,6 +54,26 @@ DRIVER_EXCLUDED = {
     # its pytest differentials (merge replay, Viterbi == exhaustive,
     # concat round-trips).
     "tokenizer_family_compare",
+    # ---- r16 rotations out: seats for the 16 floor-due rows (the
+    # r12 cohort, last green r11). Every row below is r15-green and
+    # keeps its pytest DuckDB differential; covers name rows on the
+    # r16 roster. -----------------------------------------------------
+    "active_day_codes",
+    "anomaly_flags",
+    "audio_near_dup",
+    "bm25_index_probe",
+    "catalog_number_parsing",
+    "composite_key_join",
+    "corpus_card",
+    "events_sliding_window",
+    "kmv_distinct_users",
+    "latest_event_version",
+    "pagination_window",
+    "quality_psi",
+    "retention_cohorts",
+    "scalar_subquery_filter",
+    "video_near_dup",
+    "events_key_skew",
     # ---- r14: LIVE ANN tiers whose deterministic scan+rerank halves
     # are now oracle-checked as ann_int8_rerank / ann_pq_rerank over
     # the frozen ANN fixture (VERDICT r13 #6 — the
@@ -130,22 +150,6 @@ DRIVER_EXCLUDED = {
     "dedup_survivors_quality",
     "mixture_upsample",
     # ---- r12 rotations (r11-green; within their cover cadence) -----
-    "ann_cosine_topk",
-    "basic_attributes",
-    "c4_line_filter",
-    "corpus_split",
-    "dedup_clusters",
-    "distinct_counts",
-    "diversity_sample",
-    "doc_chunking",
-    "doc_fingerprints",
-    "dsir_select",
-    "embedding_near_dup",
-    "events_session_native",
-    "events_tumbling_window",
-    "gopher_quality_gate",
-    "hash_embeddings",
-    "html_extract",
     "incremental_classifier",
     "link_authority",
     "mixture_sample",
@@ -180,6 +184,25 @@ PYTEST_ONLY_BY_DESIGN = {
 #: two-round cadence — so a justification silently invalidated by a
 #: later rotation fails a test instead of aging into prose.
 EXCLUSION_COVERS: dict[str, tuple[str, ...]] = {
+    # r16 rotations out (every row r15-green; covers stay on the
+    # roster). r16 also re-pointed the older entries whose covers had
+    # aged past the cadence at rows on the r16 roster.
+    "active_day_codes": ("scalar_functions_suite", "timestamp_formats"),
+    "anomaly_flags": ("trailing_range_stats", "events_rollup"),
+    "audio_near_dup": ("image_near_dup", "media_index_probe"),
+    "bm25_index_probe": ("bm25_search", "hybrid_search"),
+    "catalog_number_parsing": ("scalar_functions_suite", "timestamp_formats"),
+    "composite_key_join": ("latest_order_per_customer", "range_join_calendar"),
+    "corpus_card": ("pii_stats", "quality_filter"),
+    "events_sliding_window": ("events_tumbling_window", "trailing_range_stats"),
+    "kmv_distinct_users": ("sketch_dashboard",),
+    "latest_event_version": ("latest_order_per_customer", "watermark_incremental"),
+    "pagination_window": ("running_total", "priority_ordered_extract"),
+    "quality_psi": ("quality_filter", "kll_quantiles"),
+    "retention_cohorts": ("events_rollup", "events_sessionization"),
+    "scalar_subquery_filter": ("set_operations", "term_courses"),
+    "video_near_dup": ("image_near_dup", "media_index_probe"),
+    "events_key_skew": ("sketch_dashboard", "events_rollup"),
     # r14: the live ANN tiers' deterministic halves are driver-checked
     # as the fixture rows (VERDICT r13 #6); the live rows keep their
     # pytest equalities + bench witnesses
@@ -192,7 +215,7 @@ EXCLUSION_COVERS: dict[str, tuple[str, ...]] = {
     "bloom_membership": ("sketch_dashboard", "contamination"),
     "classifier_eval": ("quality_classifier",),
     "cms_frequencies": ("sketch_dashboard", "mg_heavy_hitters"),
-    "current_terms_topk": ("topk_per_group_price", "pagination_window"),
+    "current_terms_topk": ("topk_per_group_price", "running_total"),
     "event_transitions": ("events_sessionization", "events_rollup"),
     "excess_loss_select": ("quality_classifier", "temperature_mixture"),
     "json_props_extract": ("scalar_functions_suite", "pii_stats"),
@@ -226,18 +249,18 @@ EXCLUSION_COVERS: dict[str, tuple[str, ...]] = {
     "asof_join_last_click": ("range_join_calendar", "events_sessionization"),
     "assemble_sequences": ("pack_sequences", "bm25_search"),
     "cdc_upsert": ("snapshot_cdc", "latest_order_per_customer"),
-    "cube_agg": ("rollup_agg", "pivot_event_counts"),
+    "cube_agg": ("events_rollup", "distinct_counts"),
     "dedup_ngram_jaccard": ("dedup_minhash_lsh", "ngram_containment"),
     "dedup_simhash": ("dedup_exact", "dedup_minhash_lsh"),
     "doc_logprob": ("quality_classifier", "bigram_logprob"),
     "funnel_steps": ("events_sessionization", "event_transitions"),
     "lang_id_heuristic": ("text_quality_score", "quality_filter"),
-    "leakage_safe_split": ("mixture_upsample", "train_order"),
+    "leakage_safe_split": ("corpus_split", "temperature_mixture"),
     "line_dedup": ("repeated_span_removal", "dedup_exact"),
     "local_supplier_volume": ("pricing_summary_agg", "term_courses"),
     "near_dup_contamination": ("contamination", "incremental_near_dup"),
     "ngram_containment": ("dedup_ngram_jaccard", "dedup_minhash_lsh"),
-    "pricing_summary_agg": ("local_supplier_volume", "cube_agg"),
+    "pricing_summary_agg": ("events_rollup", "distinct_counts"),
     "repeated_span_removal": ("line_dedup", "dedup_exact"),
     "repetition_stats": ("text_quality_score", "quality_filter"),
     "resample_gapfill": ("trailing_range_stats", "resample_interpolate"),
@@ -247,38 +270,22 @@ EXCLUSION_COVERS: dict[str, tuple[str, ...]] = {
     "url_dedup": ("dedup_exact", "scalar_functions_suite"),
     # r12 rotations out (every row here is r11-green; covers name the
     # kept hubs / re-admitted supersets)
-    "ann_cosine_topk": ("ann_bucketed_topk", "embedding_near_dup"),
-    "basic_attributes": ("recent_instructor_updates", "term_courses"),
-    "c4_line_filter": ("crawl_gate_composed",),
-    "corpus_split": ("leakage_safe_split", "quota_sample"),
-    "dedup_clusters": ("dedup_survivors_quality", "dedup_minhash_lsh"),
-    "distinct_counts": ("cube_agg", "term_enrollments"),
-    "diversity_sample": ("mixture_upsample", "train_order"),
-    "doc_chunking": ("assemble_sequences", "pack_sequences"),
-    "doc_fingerprints": ("dedup_exact", "dedup_simhash"),
-    "dsir_select": ("train_order", "mixture_upsample"),
-    "embedding_near_dup": ("ann_bucketed_topk", "incremental_near_dup"),
-    "events_session_native": ("events_sessionization",),
-    "events_tumbling_window": ("events_sessionization", "trailing_range_stats"),
-    "gopher_quality_gate": ("crawl_gate_composed",),
-    "hash_embeddings": ("bm25_search", "ann_bucketed_topk"),
-    "html_extract": ("crawl_gate_composed",),
     "incremental_classifier": ("quality_classifier",),
     "link_authority": ("link_authority_converged",),
-    "mixture_sample": ("mixture_upsample", "quota_sample"),
+    "mixture_sample": ("temperature_mixture", "diversity_sample"),
     "omit_drops_withdrawals": ("term_courses", "recent_instructor_updates"),
     "perplexity_buckets": ("doc_logprob", "quality_classifier"),
     "phrase_search": ("assemble_sequences", "bm25_search"),
     "prefix_jaccard_join": ("dedup_ngram_jaccard", "dedup_minhash_lsh"),
-    "quota_sample": ("mixture_upsample", "leakage_safe_split"),
-    "rollup_agg": ("cube_agg",),
-    "semantic_dedup": ("ann_bucketed_topk", "dedup_survivors_quality"),
+    "quota_sample": ("corpus_split", "diversity_sample"),
+    "rollup_agg": ("events_rollup", "distinct_counts"),
+    "semantic_dedup": ("embedding_near_dup", "ann_cosine_topk"),
     "semi_anti_joins": ("contamination", "funnel_steps"),
-    "skew_salted_join": ("local_supplier_volume", "mg_heavy_hitters"),
+    "skew_salted_join": ("local_supplier_volume", "latest_order_per_customer"),
     "term_enrollments": ("term_courses",),
     "token_budget_prune": ("pack_sequences", "token_counts"),
     "token_counts": ("bm25_search", "tfidf_top_terms"),
-    "unpivot_event_counts": ("pivot_event_counts",),
+    "unpivot_event_counts": ("events_rollup", "distinct_counts"),
     # registry-only / superseded rows
     "tokenizer_family_compare": ("tokenizer_family_fold",),
 }

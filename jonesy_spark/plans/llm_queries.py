@@ -528,8 +528,9 @@ def semantic_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force cosine top-10 for 10 query vectors (broadcast
-    queries × corpus scan + rank window). The exact baseline for ANN."""
+    """Exact brute-force cosine top-10 for 10 query vectors (collected
+    queries × one map-only NumPy corpus scan + rank window). The exact
+    baseline for ANN."""
     return SIM.cosine_topk(Catalog(spark, sf_dir).embeddings, k=10, n_queries=10)
 
 

@@ -34,8 +34,13 @@ Also counted per query (informational, not failures):
                                     previously slip through);
   * ``ArrowEvalPython`` / ``MapInPandas`` / ``MapInArrow`` — the
                                     sanctioned Python boundary
-                                    (codec/as-of/PQ scorer), listed to
-                                    keep its footprint visible.
+                                    (codec/as-of, and the NumPy
+                                    vector kernel's scans: the cosine
+                                    scorer behind cosine_topk,
+                                    quantized_topk and the exact
+                                    re-rank, and the PQ scorer),
+                                    listed to keep its footprint
+                                    visible.
 
 Exit 1 when any hard anti-pattern appears. Usage:
 

@@ -1569,6 +1569,95 @@ def test_pq_topk_micro_rank_ties_across_partitions(spark):
     assert top([7, 1, 3, 4, 2, 0, 5, 6], 2, micro=False) == [(0, 7, 1)]
 
 
+def test_cosine_and_quantized_topk_rows_independent_of_partitioning(spark):
+    """The cosine scorer keeps only each partition's top rows per query
+    before the global window (and the int8 tier's re-rank scores only
+    the collected candidates), so cosine_topk and quantized_topk must
+    return the same rows from one partition, seven, and seven with AQE
+    off — live quantization and the persisted-store path alike."""
+    from jonesy_spark.operators import similarity as SIM
+
+    emb = Catalog(spark, SF_DIR).embeddings
+
+    def run(n_parts):
+        e = emb.repartition(n_parts)
+        store = SIM.quantize_embeddings(emb).repartition(n_parts)
+        frames = {
+            "cosine": SIM.cosine_topk(e, k=5, n_queries=4),
+            "cosine_ids": SIM.cosine_topk(e, query_ids=[1, 5, 9], k=7),
+            "quantized": SIM.quantized_topk(e, k=5, n_queries=4),
+            "no_rerank": SIM.quantized_topk(e, k=5, n_queries=4, rerank=False),
+            "store": SIM.quantized_topk(e, k=5, n_queries=4, store=store),
+        }
+        return {name: sorted(map(tuple, df.collect())) for name, df in frames.items()}
+
+    one = run(1)
+    assert all(one.values())
+    assert run(7) == one
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert run(7) == one
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def test_cosine_topk_micro_ties_across_partitions(spark):
+    """Two vectors whose cosines with the query differ by less than one
+    micro-unit tie after rounding, and the lower vec_id wins although
+    its raw cosine is smaller. The per-partition cut must keep it
+    whether the tied pair shares a partition or not, so every layout
+    returns the single-partition answer."""
+    import math
+
+    from jonesy_spark.operators import similarity as SIM
+
+    sc = spark.sparkContext
+    cos_of = {1: 0.5, 2: 0.90000004, 3: 0.1, 4: -0.3, 5: 0.0, 6: 0.2, 7: 0.9000001}
+    vec = {0: [1.0, 0.0]}
+    vec.update({i: [c, math.sqrt(1 - c * c)] for i, c in cos_of.items()})
+
+    def top(order, n_parts):
+        emb = spark.createDataFrame(
+            sc.parallelize([(i, vec[i], 0) for i in order], n_parts),
+            "vec_id long, embedding array<double>, label int",
+        )
+        return [tuple(r) for r in SIM.cosine_topk(emb, k=1, n_queries=1).collect()]
+
+    single = top(range(8), 1)
+    assert single == [(0, 2, 900_000, 1)]
+    assert top([7, 1, 3, 4, 2, 0, 5, 6], 2) == single  # pair split
+    assert top([7, 2, 1, 3, 0, 4, 5, 6], 2) == single  # pair together
+
+
+def test_vector_kernel_fold_is_bit_equal_to_spark_fold(spark):
+    """The NumPy kernel's dot and norm fold left to right exactly like
+    VX.dot/VX.norm, bit for bit, on arrays where summation order
+    changes the answer: [1e16, 1, -1e16, 1] . [1, 1, 1, 1] is 1.0
+    folded left to right and 2.0 or 0.0 in other orders (pairwise or
+    blocked BLAS sums). This pins the kernel against a swap to np.dot."""
+    import numpy as np
+
+    from jonesy_spark.functions import vectors as VX
+    from jonesy_spark.operators.similarity import _fold_dot, _fold_norm
+
+    rows = [
+        ([1e16, 1.0, -1e16, 1.0], [1.0, 1.0, 1.0, 1.0]),
+        ([0.1, 0.2, 0.3, 0.4], [1e20, 3.0, -1e20, 7.0]),
+        ([1e8, 1.0, 1e-8, -1e8], [1e8, 3.0, 5.0, 1e8]),
+        ([3.0, -4.0, 1e-300, 2.5], [0.7, 0.1, 1e300, -0.3]),
+    ]
+    df = spark.createDataFrame(rows, "a array<double>, b array<double>")
+    got = df.select(
+        VX.dot(F.col("a"), F.col("b")).alias("d"), VX.norm(F.col("a")).alias("n")
+    ).collect()
+    a = np.array([r[0] for r in rows])
+    b = np.array([r[1] for r in rows])
+    assert _fold_dot(a, b)[0] == 1.0
+    assert [r["d"].hex() for r in got] == [x.hex() for x in _fold_dot(a, b)]
+    assert [r["n"].hex() for r in got] == [x.hex() for x in _fold_norm(a)]
+
+
 def test_sliding_window_rollup_matches_explicit_hops(spark):
     """Catalyst's native window(ts, size, slide) lowering equals the
     closed-form hop explode — floor_S(es) - k*S for k in 0..W/S-1 —

@@ -492,7 +492,62 @@ def test_spread_probes_file_metadata_not_rdd(spark, tmp_path):
     spark.range(0, 10_000).repartition(target).write.parquet(many_path)
     many = spark.read.parquet(many_path)
     assert len(many.inputFiles()) >= target
-    assert spread(many) is many  # no-op before any file is stat'ed
+    assert spread(many) is many  # one file per core plans one partition each
+
+
+def test_spread_bin_packs_many_small_files(spark, tmp_path, monkeypatch):
+    """spread()'s estimate packs files into partitions as Spark's scan
+    does, so it equals the planned partition count: many small files
+    share partitions (one more tiny file than cores plans fewer
+    partitions than cores, and the floor fires although the file count
+    covers the cores), while one file per core, one small file and one
+    file larger than a split are counted split for split. When the JVM
+    bridge raises, spread() falls back to the RDD probe."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from py4j.protocol import Py4JError
+
+    from jonesy_spark import catalog
+    from jonesy_spark.catalog import _planned_partitions, spread
+
+    target = spark.sparkContext.defaultParallelism
+
+    def layout(name, n_files, n_rows):
+        d = tmp_path / name
+        d.mkdir()
+        for i in range(n_files):
+            ids = list(range(i * n_rows, (i + 1) * n_rows))
+            pq.write_table(pa.table({"id": ids}), d / f"part-{i:03d}.parquet")
+        return spark.read.parquet(str(d))
+
+    small = layout("small", target + 1, 1)
+    assert len(small.inputFiles()) > target
+    planned = small.rdd.getNumPartitions()
+    assert _planned_partitions(small) == planned
+    if target >= 3:  # the +1 file pairs up partitions below the cores
+        assert planned < target
+        assert spread(small) is not small
+
+    for df in (layout("per_core", target, 2000), layout("one", 1, 10)):
+        assert _planned_partitions(df) == df.rdd.getNumPartitions()
+
+    big = layout("big", 1, 200_000)
+    split = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "64k")
+    try:
+        assert big.rdd.getNumPartitions() > 1
+        assert _planned_partitions(big) == big.rdd.getNumPartitions()
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", split)
+
+    def no_bridge(*_):
+        raise Py4JError("no JVM bridge")
+
+    monkeypatch.setattr(catalog, "_file_sizes", no_bridge)
+    one = layout("fallback", 1, 10)
+    assert _planned_partitions(one) == one.rdd.getNumPartitions() == 1
+    if target > 1:
+        assert spread(one) is not one
 
 
 def test_conf_bytes_reads_spark_size_suffixes():

@@ -7,12 +7,13 @@ These folds are NOT compiled: in Spark 4.1 ``ArrayAggregate``,
 ``*(n)`` prefix in ``explain()``) and every element is interpreted.
 They stay the right tool for per-pair scores inside joins and for the
 expressions the DuckDB oracles mirror. Corpus-sized vector math — the
-brute-force cosine scan, the int8 and PQ candidate scans, their exact
-re-rank and the PQ training sample — runs in the NumPy kernel of
-``operators.similarity`` instead (``_fold_dot`` over Arrow batches in
-``mapInArrow``). That kernel folds in the same left-to-right order, one
-rounding per step, so its norms, cosines, unit vectors and codes match
-these expressions bit for bit.
+brute-force cosine scan, the int8 and PQ candidate scans with their
+quantization and IVF cell ranking, their exact re-rank and the PQ
+training sample — runs in the NumPy kernel of ``operators.similarity``
+instead (``_fold_dot`` over Arrow batches in ``mapInArrow``). That
+kernel folds in the same left-to-right order, one rounding per step,
+and rounds HALF_UP as ``round`` does, so its norms, cosines, unit
+vectors and codes match these expressions bit for bit.
 
 The fold is sequential left-to-right, so results are bit-deterministic
 for the oracle comparison (we still round at the boundary).

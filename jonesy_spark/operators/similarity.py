@@ -50,15 +50,33 @@ def _ids(b, col: str = "vec_id") -> np.ndarray:
 def _vectors(b, col: str = "embedding") -> np.ndarray:
     """(n, d) doubles of an Arrow batch or table's list column ``col``,
     or of its int8 ``qv`` struct dequantized as ``VX.dequantize_int8``
-    does."""
+    does. A null or ragged vector raises: it cannot be folded."""
     v = b.column(col)
-    if col == "qv":
-        q = pc.list_flatten(pc.struct_field(v, "q")).to_numpy()
-        scale = pc.struct_field(v, "scale").to_numpy().astype(np.float64)
-        return q.astype(np.float64).reshape(len(v), -1) * scale[:, None]
-    if v.null_count:
+    parts = [pc.struct_field(v, f) for f in ("q", "scale")] if col == "qv" else [v]
+    flat = pc.list_flatten(parts[0])
+    if any(a.null_count for a in [v, flat, *parts]):
         raise ValueError(f"null {col}: a vector store row has no vector")
-    return pc.list_flatten(v).to_numpy().astype(np.float64).reshape(len(v), -1)
+    if len(v) and pc.count_distinct(pc.list_value_length(parts[0])).as_py() > 1:
+        raise ValueError(f"ragged {col}: vectors of one column differ in length")
+    x = flat.to_numpy().astype(np.float64).reshape(len(v), -1)
+    return x * parts[1].to_numpy().astype(np.float64)[:, None] if col == "qv" else x
+
+
+def _half_up(y: np.ndarray) -> np.ndarray:
+    """``round(y)`` as Spark rounds a double: HALF_UP, ties away from 0."""
+    f = np.floor(np.abs(y))
+    return np.copysign(f + (np.abs(y) - f >= 0.5), y) + 0.0
+
+
+def _int8(b) -> np.ndarray:
+    """(n, d) int8-tier vectors of a batch, as ``VX.dequantize_int8``
+    reads its ``qv`` or ``VX.quantize_int8`` quantizes its ``embedding``
+    (q = round(x / scale), scale = max(max|x| / 127, 1e-30) as a float)."""
+    if "qv" in b.schema.names:
+        return _vectors(b, "qv")
+    x = _vectors(b)
+    scale = np.maximum(np.abs(x).max(1) / 127.0, 1e-30)[:, None]
+    return _half_up(x / scale) * scale.astype(np.float32).astype(np.float64)
 
 
 def _cosine(qx: np.ndarray):
@@ -144,7 +162,7 @@ def _no_rows(spark) -> DataFrame:
 
 
 def _rerank(emb: DataFrame, cand: DataFrame, k: int, queries) -> DataFrame:
-    """The exact tail over a separate store: re-score the ``(query_id,
+    """The exact tail of the quantized tiers: re-score the ``(query_id,
     vec_id)`` candidates on the float originals of ``emb`` (collected
     query rows ``queries``), keeping each query's top ``k``. The
     candidates broadcast into the scan: map-side, no corpus shuffle."""
@@ -185,15 +203,12 @@ def cosine_topk(
     return _by_cosine(scored, k)
 
 
-def _prepared(emb: DataFrame, n_partitions: int | None = 64) -> DataFrame:
+def _prepared(emb: DataFrame) -> DataFrame:
     # Explicit repartition: embedding folds are CPU-heavy but byte-light,
     # so AQE's size-based coalescing would serialize them otherwise
-    # (same rationale as operators.dedup.CPU_PARTITIONS). None keeps
-    # the input's partitioning.
+    # (same rationale as operators.dedup.CPU_PARTITIONS).
     v = VX.as_double(F.col("embedding"))
-    if n_partitions:
-        emb = emb.repartition(n_partitions)
-    return emb.select(
+    return emb.repartition(64).select(
         F.col("vec_id"), v.alias("v"), VX.norm(v).alias("nrm"), F.col("label")
     )
 
@@ -1017,12 +1032,10 @@ def quantized_topk(
     ``n_queries * overfetch * k`` rows. Output schema matches
     :func:`cosine_topk` so :func:`ann_recall` compares them directly.
 
-    Plan shape: the store's query rows (0 <= vec_id < n_queries) are
-    collected; one map-only NumPy scan keeps each partition's top
-    candidates per query and a rank window the global ones. Quantizing
-    live, the float originals ride in that scan, which scores the exact
-    cosine too, so a second window re-ranks without another pass; a
-    separate ``store`` re-ranks through :func:`_rerank`.
+    Plan shape: the query rows (0 <= vec_id < n_queries) are collected;
+    one map-only NumPy scan quantizes each vector as ``VX.quantize_int8``
+    does (or reads ``store``'s ``qv``) and keeps each partition's top
+    candidates; a rank window takes the global ones to :func:`_rerank`.
 
     ``store`` is the persisted-store path (VERDICT r13 #6): pass a
     precomputed ``(vec_id, qv struct<q, scale>)`` frame to skip live
@@ -1031,33 +1044,24 @@ def quantized_topk(
     round(x/scale) half-integer boundary from the cross-engine
     surface.
     """
-    live, vid = store is None, F.col("vec_id")
-    qv = VX.quantize_int8(F.col("embedding")).alias("qv")
-    scan = emb.select(vid, "embedding", qv) if live else store.select(vid, "qv")
+    vid, floats = F.col("vec_id"), emb.select("vec_id", "embedding")
+    scan = floats if store is None else store.select("vec_id", "qv")
     is_query = (vid >= 0) & (vid < n_queries)
     queries = scan.filter(is_query).toArrow()
     if not queries.num_rows:
         return _no_rows(emb.sparkSession)
     t = overfetch * k if rerank else k
-    fused = live and rerank
-    cos_q = _cosine(_vectors(queries, "qv"))
-    cos = _cosine(_vectors(queries)) if fused else None
-
-    def score(b):
-        q = cos_q(_vectors(b, "qv"))
-        return (q, cos(_vectors(b))) if fused else (q,)
-
+    cos_q = _cosine(_int8(queries))
     scored = _top_rows(
-        scan, _ids(queries), score, t, ["cosine_q", "cosine"][: 1 + fused],
+        scan, _ids(queries), lambda b: (cos_q(_int8(b)),), t, ["cosine_q"],
         desc=True, margin=2e-6,
     )
     if not rerank:
         return _by_cosine(scored, k, "cosine_q")
     cand = _ranked(scored, micro_units(F.col("cosine_q")).desc(), t)
-    if live:
-        return _by_cosine(cand, k)
-    fl = emb.select("vec_id", "embedding").filter(is_query).toArrow()
-    return _rerank(emb, cand, k, fl)
+    if store is not None:
+        queries = floats.filter(is_query).toArrow()
+    return _rerank(emb, cand, k, queries)
 
 
 def _pq_train(emb, m=8, k=16, seed=13, max_iter=8, n_train=4096) -> np.ndarray:
@@ -1232,6 +1236,22 @@ def pq_encode(emb: DataFrame, codebooks: DataFrame) -> DataFrame:
     return emb.select("vec_id", "label", "embedding").mapInArrow(encode, schema)
 
 
+def _ivf_cells(cents):
+    """``(x, probes) -> (n, probes)``: each row's nearest cells, as
+    positions in the vec_id order of the collected centroid rows
+    ``cents``, ranked as :func:`ivf_assignments` ranks them
+    (micro-rounded cosine desc, then cid)."""
+    cos = _cosine(_vectors(cents.take(np.argsort(_ids(cents), kind="stable"))))
+
+    def cells(x, probes):
+        micro = _half_up(cos(x).T * 1e6)
+        if np.isnan(micro).any():
+            raise ValueError("zero vector: its cosine to an IVF cell is undefined")
+        return np.argsort(-micro, axis=1, kind="stable")[:, :probes]
+
+    return cells
+
+
 def pq_topk(
     emb: DataFrame,
     k: int = 10,
@@ -1274,10 +1294,9 @@ def pq_topk(
     vector (or reads ``codes``), sums its ``m`` table entries per query
     and keeps each partition's top ``T = overfetch * k`` rows per query
     (``k`` without re-rank) by (adc, vec_id), masking unprobed cells;
-    a ``row_number`` window picks the global top T. Encoding in the
-    scan, it also scores each kept row's exact cosine, so a second
-    window re-ranks without another pass; given ``codes``, the T
-    candidates re-rank through :func:`_rerank`.
+    a ``row_number`` window picks the global top T, and
+    :func:`_rerank` scores them exactly. IVF cells are ranked in the
+    same kernel, as :func:`ivf_assignments` ranks them.
 
     ``adc_micro_rank`` ranks candidates by the MICRO-ROUNDED distance
     with vec_id tiebreak, a total order another engine's summation
@@ -1288,48 +1307,30 @@ def pq_topk(
         books = _pq_train(emb, m, n_codes)
     else:
         books = _pq_books(codebooks)
-    scan = emb.select("vec_id", "embedding")
-    queries = scan.filter(F.col("vec_id") < n_queries).toArrow()
+    floats = emb.select("vec_id", "embedding")
+    queries = floats.filter(F.col("vec_id") < n_queries).toArrow()
     if not queries.num_rows:  # no vectors, no queries: an empty result
         return _no_rows(emb.sparkSession)
     queries = queries.take(np.argsort(_ids(queries), kind="stable"))
     qids, qx = _ids(queries), _vectors(queries)
     lut = _pq_lut(_pq_unit(qx), books)
-    fused = rerank and codes is None
-    cos = _cosine(qx) if fused else None
-    if codes is not None:
-        scan = codes.select("vec_id", "codes")
+    scan = floats if codes is None else codes.select("vec_id", "codes")
     mask = None
     if n_cells is not None:
-        e = _prepared(emb, None)
-        cents = e.filter(F.col("vec_id") < n_cells).select(
-            F.col("vec_id").alias("cid"),
-            F.col("v").alias("cv"),
-            F.col("nrm").alias("cnrm"),
-        )
-        scan = scan.join(ivf_assignments(e, probes=1, centroids=cents), "vec_id")
-        q_cells = ivf_assignments(
-            e.filter(F.col("vec_id") < n_queries), probes=probes, centroids=cents
-        ).collect()
-        qc = np.array([(r["vec_id"], r["cid"]) for r in q_cells], np.int64)
-        cell_ids = np.unique(qc[:, 1])
-        probed = np.zeros((len(qids), len(cell_ids)), dtype=bool)
-        at = np.searchsorted(qids, qc[:, 0]), np.searchsorted(cell_ids, qc[:, 1])
-        probed[at] = True
+        cents = floats.filter(F.col("vec_id") < n_cells).toArrow()
+        cells = _ivf_cells(cents)
+        probed = np.zeros((len(qids), cents.num_rows), dtype=bool)
+        np.put_along_axis(probed, cells(qx, probes), True, axis=1)
+        if codes is not None:
+            scan = scan.join(floats, "vec_id")
 
         def mask(b, vid):
-            cid = b.column("cid").to_numpy()
-            at = np.searchsorted(cell_ids, cid).clip(max=len(cell_ids) - 1)
-            return probed[:, at] & (cell_ids[at] == cid)
-
-    def score(b):
-        adc = _pq_adc(lut, _pq_codes(b, books))
-        return (adc, cos(_vectors(b))) if fused else (adc,)
+            return probed[:, cells(_vectors(b), 1)[:, 0]]
 
     t = overfetch * k if rerank else k
     scored = _top_rows(
-        scan, qids, score, t, ["adc_d2", "cosine"][: 1 + fused],
-        margin=2e-6 if adc_micro_rank else 0.0, mask=mask,
+        scan, qids, lambda b: (_pq_adc(lut, _pq_codes(b, books)),), t,
+        ["adc_d2"], margin=2e-6 if adc_micro_rank else 0.0, mask=mask,
     )
     cand = _ranked(
         scored, micro_units(F.col("adc_d2")) if adc_micro_rank else F.col("adc_d2"), t
@@ -1337,7 +1338,7 @@ def pq_topk(
     if not rerank:
         # approximate scores straight from ADC (unit vectors): cos = 1 - d2/2
         return _by_cosine(cand.withColumn("cosine", 1 - F.col("adc_d2") / 2), k)
-    return _by_cosine(cand, k) if fused else _rerank(emb, cand, k, queries)
+    return _rerank(emb, cand, k, queries)
 
 
 def write_pq_index(

@@ -1658,6 +1658,101 @@ def test_vector_kernel_fold_is_bit_equal_to_spark_fold(spark):
     assert [r["n"].hex() for r in got] == [x.hex() for x in _fold_norm(a)]
 
 
+def test_int8_kernel_is_bit_equal_to_spark_quantize(spark):
+    """The kernel's int8 tier quantizes like VX.quantize_int8 and reads
+    back like VX.dequantize_int8, bit for bit. Each row's max is 127, so
+    its scale is 1.0 and x / scale lands exactly on half-integers:
+    round() there is HALF_UP, away from zero (2.5 -> 3, -0.5 -> -1),
+    not NumPy's half-to-even, and 0.49999999999999994 stays 0 although
+    adding 0.5 to it rounds up to 1.0."""
+    from jonesy_spark.functions import vectors as VX
+    from jonesy_spark.operators.similarity import _int8
+
+    rows = [
+        [127.0, 2.5, -2.5, 0.5, -0.5, 1.5],
+        [-127.0, 0.49999999999999994, -0.49999999999999994, 126.5, 3.5, -4.5],
+        [0.0, 0.0, 0.0, 0.0, 0.0, 0.0],
+        [0.1, -0.7, 1e-3, 0.3, 0.25, -0.125],
+    ]
+    df = spark.createDataFrame([(r,) for r in rows], "embedding array<double>")
+    spark_rows = df.select(
+        VX.dequantize_int8(VX.quantize_int8(F.col("embedding"))).alias("d")
+    ).collect()
+    got = _int8(df.toArrow())
+    assert got[0].tolist()[1:] == [3.0, -3.0, 1.0, -1.0, 2.0]
+    assert got[1].tolist()[1:3] == [0.0, 0.0]
+    assert [[x.hex() for x in r["d"]] for r in spark_rows] == [
+        [x.hex() for x in r] for r in got
+    ]
+
+
+def test_vector_kernel_rejects_ragged_and_null_vectors(spark):
+    """A batch whose vectors differ in length cannot be folded, even
+    when its flattened length divides evenly (3 + 5 = 2 x 4), and a
+    null vector or int8 store row has nothing to fold: each raises
+    instead of scoring misaligned vectors."""
+    import pyarrow as pa
+
+    from jonesy_spark.operators import similarity as SIM
+
+    ragged = pa.table({"embedding": [[1.0, 2.0, 3.0], [1.0, 2.0, 3.0, 4.0, 5.0]]})
+    with pytest.raises(ValueError, match="ragged embedding"):
+        SIM._vectors(ragged)
+    with pytest.raises(ValueError, match="null embedding"):
+        SIM._vectors(pa.table({"embedding": [[1.0, 2.0], None]}))
+    qv = pa.array(
+        [{"q": [1, 2], "scale": 0.5}, None],
+        pa.struct([("q", pa.list_(pa.int8())), ("scale", pa.float32())]),
+    )
+    with pytest.raises(ValueError, match="null qv"):
+        SIM._vectors(pa.table({"qv": qv}), "qv")
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0], 0), (1, [1.0, 2.0], 0), (2, [1.0] * 6, 0)],
+        "vec_id long, embedding array<double>, label int",
+    ).repartition(1)
+    with pytest.raises(Exception, match="ragged embedding"):
+        SIM.cosine_topk(emb, k=2, n_queries=1).collect()
+    store = spark.createDataFrame(
+        [(0, ([1, 0], 1.0)), (1, None), (2, ([0, 1], 1.0))],
+        "vec_id long, qv struct<q: array<tinyint>, scale: float>",
+    ).repartition(1)
+    floats = spark.createDataFrame(
+        [(i, [1.0, float(i)], 0) for i in range(3)],
+        "vec_id long, embedding array<double>, label int",
+    )
+    with pytest.raises(Exception, match="null qv"):
+        SIM.quantized_topk(floats, k=1, n_queries=1, store=store).collect()
+
+
+def test_ivf_cell_kernel_matches_ivf_assignments(spark):
+    """pq_topk ranks IVF cells in the kernel; its cells must be the ones
+    ivf_assignments picks (micro-rounded cosine desc, then cid) for
+    every vector, at one probe and at several."""
+    import numpy as np
+
+    from jonesy_spark.operators import similarity as SIM
+
+    emb = Catalog(spark, SF_DIR).embeddings
+    e = SIM._prepared(emb)
+    cents_df = e.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm")
+    )
+    floats = emb.select("vec_id", "embedding").toArrow()
+    cents = emb.select("vec_id", "embedding").filter(F.col("vec_id") < 8).toArrow()
+    cids = np.sort(SIM._ids(cents))
+    cells = SIM._ivf_cells(cents)
+    for probes in (1, 3):
+        want = {
+            (r["vec_id"], r["cid"])
+            for r in SIM.ivf_assignments(e, probes=probes, centroids=cents_df).collect()
+        }
+        got = cids[cells(SIM._vectors(floats), probes)]
+        assert {
+            (v, c) for v, row in zip(SIM._ids(floats), got.tolist()) for c in row
+        } == want
+
+
 def test_sliding_window_rollup_matches_explicit_hops(spark):
     """Catalyst's native window(ts, size, slide) lowering equals the
     closed-form hop explode — floor_S(es) - k*S for k in 0..W/S-1 —
